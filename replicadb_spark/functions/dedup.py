@@ -104,28 +104,6 @@ def exploded_shingle_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -
     )
 
 
-def minhash_signature(hashes: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """MinHash signature as one array expression: for each (a,b), min over
-    shingle hashes of (a*x + b) mod 1e9+7. Empty set → MOD sentinel.
-
-    NOTE: evaluating N of these over the same ``hashes`` subtree
-    re-executes it N times (higher-order functions are interpreted — no
-    common-subexpression elimination), so for bulk signature computation
-    use minhash_signatures_df, which explodes once and runs N codegen'd
-    min() aggregates instead."""
-    def perm(a: int, b: int):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MOD
-
-    sigs = [
-        F.coalesce(
-            F.array_min(F.transform(hashes, perm(a, b))),
-            F.lit(MOD).cast("long"),
-        )
-        for a, b in minhash_params(num_hashes, seed)
-    ]
-    return F.array(*sigs)
-
-
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str,
@@ -875,8 +853,8 @@ def semantic_dedup(
     Scale: the SemDeDup contract is that pairwise work happens only
     inside cells — choose n_cells ∝ corpus size so cells stay at the
     ~10k-vector scale and the per-cell Gram work is bounded; the
-    cluster step is a broadcast join (corpus never shuffles to assign)
-    plus ONE shuffle to group by cell. The greedy scan is O(|cell| ·
+    cluster step is the shared zero-shuffle assignment kernel plus ONE
+    shuffle to group by cell. The greedy scan is O(|cell| ·
     |kept|) vectorized rows — strictly less than the Gram matrix the
     verification pass builds anyway. Deterministic: cells, processing
     order (ascending id), and tie handling are all hash/id-based, no
@@ -886,56 +864,35 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from replicadb_spark.functions.similarity import coarse_centroids
+    from replicadb_spark.functions.similarity import (
+        _collect_centroid_matrix,
+        _unit_rows,
+        assign_cells_kernel,
+        coarse_centroids,
+    )
 
     cents = coarse_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
         lloyd_iters=lloyd_iters,
     )
     # The centroid table is bounded (n_cells rows — the codebook-collect
-    # precedent), so nearest-cell assignment is a ZERO-shuffle Arrow
-    # argmax with the centroid matrix riding the closure: the corpus
-    # shuffles exactly once in this whole operator (the per-cell
-    # groupBy below). Ties go to the lower cell id, matching
-    # assign_cells' (score desc, cell asc) order bit-for-bit: argmax
-    # on an epsilon-free score matrix returns the FIRST maximal column,
-    # and columns are ordered by cell id.
+    # precedent), so nearest-cell assignment is the shared ZERO-shuffle
+    # Arrow kernel with the centroid matrix riding the closure: the
+    # corpus shuffles exactly once in this whole operator (the per-cell
+    # groupBy below).
     id_t = dict(corpus.dtypes)[id_col]
-    crows = cents.orderBy("cell").collect()
+    crows, cell_ids, Cn = _collect_centroid_matrix(cents)
     if not crows:  # empty corpus → empty verdict, same schema
         return corpus.sparkSession.createDataFrame(
             [], f"id {id_t}, cell int, kept boolean"
         )
-    cell_ids = np.array([r["cell"] for r in crows])
-    C = np.array([r["cent_vec"] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = C / cn[:, None]
-
-    def assign_local(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            S = (M / mn[:, None]) @ Cn.T  # (rows, n_cells) cosine
-            best = cell_ids[S.argmax(axis=1)]
-            yield pd.DataFrame(
-                {"__vid": pdf["__vid"], "cell": best, "__v": pdf["__v"]}
-            )
-
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
-    assigned = corpus.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
-    ).mapInPandas(assign_local, schema=f"__vid {id_t}, cell int, __v {vec_t}")
+    assigned = assign_cells_kernel(
+        corpus, cell_ids, Cn, id_col=id_col, vec_col=vec_col, keep_vec=True
+    )
 
     def greedy(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("__vid").reset_index(drop=True)
-        M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0.0] = 1.0  # zero vectors are similar to nothing
-        M = M / nrm[:, None]
+        M = _unit_rows(np.array(pdf["__v"].tolist(), dtype=np.float64))
         kept_rows: list[int] = []
         kept = np.zeros(len(pdf), dtype=bool)
         for i in range(len(pdf)):

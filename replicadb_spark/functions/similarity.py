@@ -56,8 +56,8 @@ def knn_bruteforce(
     driver (the codebook/broadcast precedent — the same memory class as
     the broadcast relation the old crossJoin built) and its matrix
     rides the scoring closure; the corpus streams through ONE Arrow
-    pass that scores a whole batch against every query with a single
-    BLAS matmul and keeps only its local top-k per query. The corpus
+    pass that scores a whole batch against every query with one
+    einsum product and keeps only its local top-k per query. The corpus
     is never joined and never shuffled — the only exchange is the
     final ≤ k·partitions·|queries|-row ranking window on query_id.
     (The prior shape scored the broadcast crossJoin with the
@@ -68,9 +68,10 @@ def knn_bruteforce(
     (Spark NaN-greatest), zero-norm vectors score null and rank last,
     matching `cosine`'s try_divide contract exactly.
 
-    Float note: scores are double matmuls (pairwise summation) where
-    the old fold summed sequentially — identical inputs, ±1e-15 on the
-    sum. Every gated consumer rounds scores to 4 dp and ranks with an
+    Float note: scores are double einsum products where the old fold
+    summed in a different order — identical inputs, ±1e-15 on the
+    sum, but the same bits for a vector wherever it sits in a batch.
+    Every gated consumer rounds scores to 4 dp and ranks with an
     id tiebreak, the same margin calculus the catalog's other float
     scores document (and the cross-engine DuckDB comparison already
     tolerated a different summation order than the fold's).
@@ -129,8 +130,13 @@ def knn_bruteforce(
             C = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
             cn = np.linalg.norm(C, axis=1)
             denom = cn[:, None] * qn[None, :]
+            # einsum, not BLAS `C @ Q.T`: BLAS blocks the product by
+            # batch shape, so an identical vector would score
+            # differently in the last ulp depending on its batch and
+            # hide the tie from the id tiebreak; einsum's per-element
+            # loop does not depend on position or batch size
             with np.errstate(invalid="ignore", divide="ignore"):
-                S = (C @ Q.T) / denom
+                S = np.einsum("nd,qd->nq", C, Q) / denom
             # try_divide semantics: divisor exactly 0 → NULL (never
             # ±inf); NaN from NaN-element vectors propagates as NaN
             null_m = denom == 0.0
@@ -180,13 +186,20 @@ def knn_bruteforce(
         "score",
         F.when(F.col("score_nan"), F.lit(float("nan"))).otherwise(F.col("score")),
     )
+    return _top_k(restored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score) → each query's k best with a
+    1-based rank, under the ANN family's one total order: score desc
+    (NaN first, NULL last — Spark's desc), then neighbor_id asc."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc_nulls_last(), F.col("neighbor_id").asc()
+        F.col("score").desc(), F.col("neighbor_id").asc()
     )
     return (
-        restored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("score"), "rank")
+        .select("query_id", "neighbor_id", "score", "rank")
     )
 
 
@@ -215,12 +228,6 @@ def _signature_from(vec: Column, planes: list[list[float]]) -> Column:
         )
         acc = acc * 2 + F.when(d > 0, F.lit(1)).otherwise(F.lit(0))
     return acc
-
-
-def lsh_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 13) -> Column:
-    """Random-hyperplane signature as one bucket id (long). ±1 hyperplanes
-    make the dot an exact sum of floats widened to double."""
-    return _signature_from(vec, _hyperplanes(dim, n_planes, seed))
 
 
 def lsh_tables(vec: Column, dim: int, n_tables: int, bits: int, seed: int = 13) -> Column:
@@ -302,12 +309,7 @@ def ann_lsh(
         .join(F.broadcast(q), "query_id")
         .select("query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def coarse_centroids(
@@ -318,9 +320,9 @@ def coarse_centroids(
     n_cells: int = 16,
     lloyd_iters: int = 0,
 ) -> DataFrame:
-    """Deterministic coarse quantizer shared by ann_ivf / ann_ivf_pq /
-    semantic_dedup: one hash-picked representative vector per cell
-    (member with the smallest xxhash64(id), ties by min id via the
+    """Deterministic coarse quantizer behind every consumer of the
+    quantizer core below: one hash-picked representative vector per
+    cell (member with the smallest xxhash64(id), ties by min id via the
     struct-min), optionally refined by ``lloyd_iters`` textbook
     distributed k-means steps (broadcast-assign, ONE shuffle per step
     to average members, id-sorted fold for bit-deterministic means,
@@ -389,52 +391,60 @@ def coarse_centroids(
     return centroids
 
 
-def assign_cells(
-    df: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    top: int = 1,
-) -> DataFrame:
-    """Nearest-cell assignment against a broadcast centroid table:
-    returns DataFrame(__vid, cell) with each vector's ``top`` closest
-    cells by cosine (ties to the lower cell id). The corpus partition
-    never shuffles — it streams through the broadcast join; the only
-    exchange is the tiny per-vector top-k window keyed by __vid.
-    (Callers needing top=1 over a BOUNDED centroid table and the
-    vector alongside should prefer the collected-argmax kernel shape —
-    see dedup.semantic_dedup — which has zero exchanges.)"""
-    w_cell = Window.partitionBy("__vid").orderBy(
-        F.col("__cscore").desc(), F.col("cell").asc()
-    )
-    scored = (
-        df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
-        .crossJoin(F.broadcast(centroids))
-        .select(
-            "__vid", "cell", cosine(F.col("__v"), F.col("cent_vec")).alias("__cscore")
-        )
-    )
-    return (
-        scored.withColumn("__r", F.row_number().over(w_cell))
-        .where(F.col("__r") <= top)
-        .select("__vid", "cell")
-    )
+# ---------------------------------------------------------------------------
+# The vector-quantizer core. Every quantizer consumer — ann_ivf,
+# ann_ivf_pq, the persisted IVF / IVF-PQ indexes (operators/ann_index),
+# semantic_dedup and stream_semantic_dedup — runs the steps below, so the
+# decisions they share live here once:
+#
+# - the zero-norm rule (_unit_rows): a zero vector normalizes to itself
+#   and scores 0.0 against everything;
+# - the cell-assignment rule (_nearest_cells): cosine desc, ties to the
+#   lower cell, zero vectors to the lowest cell;
+# - the PQ code format (_pq_encode_cells): m_sub int codes plus the
+#   reconstruction norm, scored by _pq_adc.
+# ---------------------------------------------------------------------------
+
+
+def _unit_rows(M):
+    """Row-normalize ``M`` under the zero-norm rule: a zero row divides
+    by 1.0 and stays zero, so it is similar to nothing and ties across
+    every cell."""
+    import numpy as np
+
+    n = np.linalg.norm(M, axis=-1, keepdims=True)
+    n[n == 0.0] = 1.0
+    return M / n
+
+
+def _centroid_matrix(rows):
+    """(cell ids, row-normalized matrix) from (cell, vector) pairs. The
+    given order is the column order, which breaks score ties."""
+    import numpy as np
+
+    cells = np.array([c for c, _ in rows])
+    return cells, _unit_rows(np.array([v for _, v in rows], dtype=np.float64))
 
 
 def _collect_centroid_matrix(centroids: DataFrame):
     """Collect the BOUNDED centroid table (n_cells rows — the codebook
-    precedent) as (rows, cell_ids, row-normalized matrix) for the
-    zero-shuffle Arrow assignment kernel. Zero-norm centroids divide
-    by 1.0 (the semantic_dedup convention)."""
+    precedent) in cell order as (rows, cell ids, row-normalized matrix)
+    for the zero-shuffle Arrow assignment kernel."""
+    crows = centroids.orderBy("cell").collect()
+    return (crows, *_centroid_matrix([(r["cell"], r["cent_vec"]) for r in crows]))
+
+
+def _nearest_cells(M, Cn, top: int):
+    """Column indexes of each row's ``top`` nearest cells by cosine.
+    Columns are cell-ordered, so ``argmax`` (first maximal column) and
+    the stable ``argsort(-S)`` both send equal scores to the lower cell;
+    a zero row scores 0.0 everywhere and lands in the lowest cell."""
     import numpy as np
 
-    crows = centroids.orderBy("cell").collect()
-    cells = np.array([r["cell"] for r in crows])
-    C = np.array([r["cent_vec"] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    return crows, cells, C / cn[:, None]
+    S = _unit_rows(M) @ Cn.T
+    if top == 1:
+        return S.argmax(axis=1)[:, None]
+    return np.argsort(-S, axis=1, kind="stable")[:, :top]
 
 
 def assign_cells_kernel(
@@ -448,16 +458,12 @@ def assign_cells_kernel(
     keep_vec: bool = False,
 ):
     """Nearest-cell assignment against a COLLECTED centroid matrix: ONE
-    zero-shuffle, zero-join Arrow pass (r18 — the semantic_dedup argmax
-    kernel generalized to top-k; guide §4.2). Ordering contract is
-    assign_cells' (cosine desc, cell asc) bit-for-bit on an
-    epsilon-free score matrix: the matrix columns are cell-ordered, so
-    ``argmax`` returns the first maximal column and the stable
-    ``argsort(-S)`` keeps lower cells first among equal scores. Zero
-    vectors score 0.0 against every cell and land in the lowest cell —
-    the same cell the window path's NULL-ranks-last ordering picks.
-    Returns (__vid, cell[, __v when keep_vec]); equivalence to the
-    window path is pinned by tests/test_similarity.py."""
+    zero-shuffle, zero-join Arrow pass (guide §4.2) returning each
+    vector's ``top`` nearest cells under the ``_nearest_cells`` rule.
+    Returns (__vid, cell[, __v when keep_vec]); equivalence to a
+    crossJoin + per-vector-window reference (zero vectors: NULL cosine
+    ranks last there, the same lowest cell) is pinned by
+    tests/test_similarity.py."""
     import numpy as np
     import pandas as pd
 
@@ -469,13 +475,7 @@ def assign_cells_kernel(
             if not len(pdf):
                 continue
             M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            S = (M / mn[:, None]) @ Cn.T
-            if top == 1:
-                idx = S.argmax(axis=1)[:, None]
-            else:
-                idx = np.argsort(-S, axis=1, kind="stable")[:, :top]
+            idx = _nearest_cells(M, Cn, top)
             n = idx.shape[1]
             out = {
                 "__vid": np.repeat(pdf["__vid"].values, n),
@@ -495,6 +495,179 @@ def assign_cells_kernel(
     ).mapInPandas(go, schema=schema)
 
 
+def _probe_side(
+    queries: DataFrame, cells, Cn, *, id_col: str, vec_col: str, n_probe: int
+) -> DataFrame:
+    """(query_id, cell, q_vec): one row per probed cell of each query."""
+    return assign_cells_kernel(
+        queries, cells, Cn, id_col=id_col, vec_col=vec_col,
+        top=n_probe, keep_vec=True,
+    ).toDF("query_id", "cell", "q_vec")
+
+
+def _probe_join(cell_rows: DataFrame, probes: DataFrame) -> DataFrame:
+    """Candidates: every (neighbor_id, cell, …) row inside one of a
+    query's probed cells, self-matches dropped. The probe side is
+    ≤ n_probe·|queries| rows and broadcast; the corpus never shuffles."""
+    return cell_rows.join(F.broadcast(probes), "cell").where(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+
+
+def _pq_sample(corpus: DataFrame, id_col: str, vec_col: str, ks: int, seed: int):
+    """The PQ codebook sample: ≤ ks hash-picked corpus vectors as
+    (b, sv) rows in b order — one bounded driver collect, constant size
+    regardless of corpus size."""
+    rows = (
+        corpus.select(
+            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(ks)).cast("int").alias("b"),
+            F.struct(
+                F.xxhash64(F.col(id_col), F.lit(seed + 1)).alias("__h"),
+                F.col(id_col).alias("__sid"),
+                F.col(vec_col).alias("__sv"),
+            ).alias("__pick"),
+        )
+        .groupBy("b")
+        .agg(F.min("__pick").alias("__pick"))
+        .select("b", F.col("__pick.__sv").alias("sv"))
+        .collect()
+    )
+    return sorted(rows, key=lambda r: r["b"])
+
+
+def _pq_codebook(vectors, m_sub: int):
+    """Sampled vectors → the (m_sub, ks_eff, dsub) codebook; ks_eff may
+    be < ks on tiny corpora."""
+    import numpy as np
+
+    S_ = np.array(vectors, dtype=np.float64)
+    dim = S_.shape[1]
+    if dim % m_sub:
+        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+    return np.ascontiguousarray(
+        S_.reshape(len(S_), m_sub, dim // m_sub).transpose(1, 0, 2)
+    )
+
+
+def _pq_encode_cells(
+    df: DataFrame, cells, Cn, CB, *, id_col: str, vec_col: str
+) -> DataFrame:
+    """ONE Arrow pass: (id, vec) → (__vid, cell, codes, recon_norm) —
+    the nearest coarse cell plus the PQ code (per subvector, the nearest
+    codeword) and |x̂|, the norm of the PQ reconstruction."""
+    import numpy as np
+    import pandas as pd
+
+    m_sub, _, dsub = CB.shape
+    cb_norms_sq = (CB ** 2).sum(axis=2)  # (m_sub, ks_eff)
+    id_t = dict(df.dtypes)[id_col]
+
+    def encode(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.array(pdf["__v"].tolist(), dtype=np.float64)  # (n, dim)
+            # (n, m_sub, ks): ||x_m - c_j||² = |x|² - 2 x·c + |c|²; the
+            # |x|² term is constant per (row, m) → argmin over -2x·c+|c|²
+            dots = np.einsum("nmd,mkd->nmk", X.reshape(len(X), m_sub, dsub), CB)
+            code = (cb_norms_sq[None, :, :] - 2.0 * dots).argmin(axis=2)
+            recon_sq = cb_norms_sq[np.arange(m_sub)[None, :], code].sum(axis=1)
+            yield pd.DataFrame({
+                "__vid": pdf["__vid"].values,
+                "cell": cells[_nearest_cells(X, Cn, 1)[:, 0]],
+                "codes": list(code.astype(np.int32)),
+                "recon_norm": np.sqrt(recon_sq),
+            })
+
+    return df.select(
+        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
+    ).mapInPandas(
+        encode, schema=f"__vid {id_t}, cell int, codes array<int>, recon_norm double"
+    )
+
+
+def _pq_adc(cand: DataFrame, CB) -> DataFrame:
+    """ADC scores for (query_id, neighbor_id, codes, recon_norm, q_vec)
+    candidates: each query builds its (m_sub × ks) lookup table of
+    subvector dot products ONCE per task, and a candidate scores by
+    fancy-indexed LUT sums, dot(q, x̂) / (|q|·|x̂|) — no float decode of
+    the corpus. A zero denominator scores 0.0."""
+    import numpy as np
+    import pandas as pd
+
+    m_sub, _, dsub = CB.shape
+    types = dict(cand.dtypes)
+
+    def adc(batches):
+        luts: dict = {}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = np.empty(len(pdf), dtype=np.float64)
+            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            recon = pdf["recon_norm"].values
+            qids = pdf["query_id"].values
+            for qid in pd.unique(qids):
+                sel = qids == qid
+                if qid not in luts:
+                    qv = np.array(pdf["q_vec"].values[sel][0], dtype=np.float64)
+                    luts[qid] = (
+                        np.einsum("md,mkd->mk", qv.reshape(m_sub, dsub), CB),
+                        float(np.sqrt((qv ** 2).sum())),
+                    )
+                lut, qn = luts[qid]
+                dots = lut[np.arange(m_sub)[None, :], codes[sel]].sum(axis=1)
+                denom = qn * recon[sel]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    out[sel] = np.where(denom > 0, dots / denom, 0.0)
+            yield pd.DataFrame({
+                "query_id": pdf["query_id"].values,
+                "neighbor_id": pdf["neighbor_id"].values,
+                "score": out,
+            })
+
+    return cand.select(
+        "query_id", "neighbor_id", "codes", "recon_norm", "q_vec"
+    ).mapInPandas(
+        adc,
+        schema=f"query_id {types['query_id']}, neighbor_id {types['neighbor_id']}, "
+        "score double",
+    )
+
+
+def _pq_search(
+    cand: DataFrame,
+    CB,
+    *,
+    k: int,
+    rerank: int,
+    corpus: DataFrame | None,
+    q_vecs: DataFrame,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """ADC-score the probed candidates, then rank. Without a ``corpus``
+    the ADC top-k is the answer; with one, the top max(rerank, k) ADC
+    shortlist is exact-rescored against the raw vectors (the standard
+    two-stage retrieve+rerank): a broadcast of ≤ rerank·|queries|
+    candidate ids onto the corpus, which never shuffles. Returns
+    (query_id, neighbor_id, score, rank)."""
+    scored = _pq_adc(cand, CB)
+    if corpus is None:
+        return _top_k(scored, k)
+    shortlist = _top_k(scored, max(rerank, k)).select("query_id", "neighbor_id")
+    exact = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+        .join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(q_vecs), "query_id")
+        .select(
+            "query_id", "neighbor_id",
+            cosine(F.col("q_vec"), F.col("c_vec")).alias("score"),
+        )
+    )
+    return _top_k(exact, k)
+
+
 def ann_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -512,10 +685,11 @@ def ann_ivf(
     nearest cell; each query probes its n_probe nearest cells and
     brute-forces only those.
 
-    Scale: the centroid table is tiny and broadcast twice (assignment +
-    probe); the corpus partition never shuffles for assignment — it streams
-    through a broadcast join. The candidate join is corpus⋈probed-cells on
-    cell id: O(n · n_probe / n_cells) scored pairs instead of O(n·q).
+    Scale: the centroid table is tiny (n_cells rows) and collected once;
+    both sides assign through the zero-shuffle Arrow kernel, which also
+    carries the vector, so the corpus never shuffles or joins to assign.
+    The candidate join is corpus⋈probed-cells on cell id:
+    O(n · n_probe / n_cells) scored pairs instead of O(n·q).
     Centroid selection is ONE map-side-combined hash aggregate over
     (pmod(xxhash64(id), n_cells)) — each task emits ≤ n_cells partial
     rows, so there is no count() action, no global sort, and no
@@ -538,44 +712,22 @@ def ann_ivf(
         n_cells=n_cells,
         lloyd_iters=lloyd_iters,
     )
-    # r18: the centroid table is bounded (n_cells rows) — collect it
-    # once (the codebook precedent) and assign both sides with the
-    # zero-shuffle Arrow argmax kernel instead of two crossJoin +
-    # per-vector-window passes over the interpreted cosine fold.
-    # Assignment ordering is identical (pinned); the corpus partition
-    # still never shuffles to assign.
-    _, cells_arr, Cn = _collect_centroid_matrix(centroids)
-    c_assign = assign_cells_kernel(
-        corpus, cells_arr, Cn, id_col=id_col, vec_col=vec_col, top=1
+    _, cells, Cn = _collect_centroid_matrix(centroids)
+    c = assign_cells_kernel(
+        corpus, cells, Cn, id_col=id_col, vec_col=vec_col, keep_vec=True
+    ).toDF("neighbor_id", "cell", "c_vec")
+    q = _probe_side(
+        queries, cells, Cn, id_col=id_col, vec_col=vec_col, n_probe=n_probe
     )
-    q_probe = assign_cells_kernel(
-        queries, cells_arr, Cn, id_col=id_col, vec_col=vec_col, top=n_probe
-    )
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).join(c_assign.withColumnRenamed("__vid", "neighbor_id"), "neighbor_id")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).join(q_probe.withColumnRenamed("__vid", "query_id"), "query_id")
-
     scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
+        _probe_join(c, q)
         .select(
             "query_id", "neighbor_id",
             cosine(F.col("q_vec"), F.col("c_vec")).alias("score"),
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _exact_rescore(v: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
@@ -813,15 +965,15 @@ def ann_ivf_pq(
     Three stages, each with the 100 TB-safe plan:
 
     1. coarse IVF — the same deterministic hash-picked centroid table
-       as ann_ivf, broadcast for assignment (corpus never shuffles);
+       as ann_ivf, collected for the zero-shuffle assignment kernel;
     2. product quantization — each vector split into ``m_sub``
        subvectors, each encoded as the nearest of ``ks`` codewords:
        64-dim float32 (256 B) → m_sub bytes (16 B at defaults, 16×
        compression). The codebook is ``ks`` hash-sampled corpus
        vectors — CONSTANT-size (ks rows) regardless of corpus size, so
        the one driver collect here is bounded like a broadcast-join
-       build side, not a scale-dependent pull. Encoding is one
-       vectorized mapInPandas pass; codes live alongside the cell id.
+       build side, not a scale-dependent pull. Cell assignment and
+       encoding are one vectorized mapInPandas pass.
     3. ADC search — each query builds an (m_sub × ks) lookup table of
        subvector dot products ONCE, scores candidates in its probed
        cells by fancy-indexed LUT sums (no float decode of the corpus),
@@ -832,142 +984,26 @@ def ann_ivf_pq(
     Approximate cosine: dot(q, x̂) / (|q|·|x̂|) with x̂ the PQ
     reconstruction; |x̂| is stored at encode time (one double per row).
     Deterministic end-to-end: hash-picked centroids and codebook, fixed
-    tiebreaks, so the recall gate hashes stably.
+    tiebreaks, so the recall gate hashes stably. The persisted
+    operators/ann_index.build_ivf_pq_index + search_ivf_pq_index run
+    these same steps with parquet between them.
     """
-    import numpy as np
-    import pandas as pd
-
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
-
-    # --- coarse centroids (the shared quantizer, same as ann_ivf) -----
     centroids = coarse_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells
     )
-    # r18: collected-matrix Arrow argmax assignment (see ann_ivf)
-    _, _cells_arr, _Cn = _collect_centroid_matrix(centroids)
-
-    def assign(df: DataFrame, top: int) -> DataFrame:
-        return assign_cells_kernel(
-            df, _cells_arr, _Cn, id_col=id_col, vec_col=vec_col, top=top
-        )
-
-    # --- codebook: ks hash-sampled vectors, constant size -------------
-    sample = (
-        corpus.select(
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(ks)).cast("int").alias("b"),
-            F.struct(
-                F.xxhash64(F.col(id_col), F.lit(seed + 1)).alias("__h"),
-                F.col(id_col).alias("__sid"),
-                F.col(vec_col).alias("__sv"),
-            ).alias("__pick"),
-        )
-        .groupBy("b")
-        .agg(F.min("__pick").alias("__pick"))
-        .select(F.col("__pick.__sv").alias("sv"))
-        .collect()  # ≤ ks rows — bounded by a constant, see docstring
+    _, cells, Cn = _collect_centroid_matrix(centroids)
+    sample = _pq_sample(corpus, id_col, vec_col, ks, seed)
+    CB = _pq_codebook([r["sv"] for r in sample], m_sub)
+    encoded = _pq_encode_cells(
+        corpus, cells, Cn, CB, id_col=id_col, vec_col=vec_col
+    ).withColumnRenamed("__vid", "neighbor_id")
+    probes = _probe_side(
+        queries, cells, Cn, id_col=id_col, vec_col=vec_col, n_probe=n_probe
     )
-    S_ = np.array([r["sv"] for r in sample], dtype=np.float64)  # (≤ks, dim)
-    dim = S_.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    # (m_sub, ks_eff, dsub); ks_eff may be < ks on tiny corpora
-    CB = np.ascontiguousarray(S_.reshape(len(S_), m_sub, dsub).transpose(1, 0, 2))
-    cb_norms_sq = (CB ** 2).sum(axis=2)  # (m_sub, ks_eff)
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["__v"].tolist(), dtype=np.float64)  # (n, dim)
-            Xs = X.reshape(len(X), m_sub, dsub)
-            # (n, m_sub, ks): ||x_m - c_j||² = |x|² - 2 x·c + |c|²; the
-            # |x|² term is constant per (row, m) → argmin over -2x·c+|c|²
-            dots = np.einsum("nmd,mkd->nmk", Xs, CB)
-            code = (cb_norms_sq[None, :, :] - 2.0 * dots).argmin(axis=2)  # (n, m_sub)
-            rows = np.arange(len(X))[:, None]
-            recon_sq = cb_norms_sq[np.arange(m_sub)[None, :], code].sum(axis=1)
-            yield pd.DataFrame({
-                "neighbor_id": pdf["__vid"].values,
-                "codes": list(code.astype(np.int32)),
-                "recon_norm": np.sqrt(recon_sq),
-            })
-
-    encoded = (
-        corpus.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
-        .mapInPandas(encode, schema="neighbor_id long, codes array<int>, recon_norm double")
-        .join(
-            assign(corpus, 1).withColumnRenamed("__vid", "neighbor_id"), "neighbor_id"
-        )
-    )
-
-    q_probe = assign(queries, n_probe).withColumnRenamed("__vid", "query_id")
     q_vecs = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    cand = (
-        encoded.join(F.broadcast(q_probe), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(q_vecs), "query_id")
-    )
-
-    def adc(batches):
-        luts: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_scores = np.empty(len(pdf), dtype=np.float64)
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            recon = pdf["recon_norm"].values
-            qids = pdf["query_id"].values
-            for qid in pd.unique(qids):
-                sel = qids == qid
-                if qid not in luts:
-                    qv = np.array(pdf["q_vec"].values[sel][0], dtype=np.float64)
-                    qs = qv.reshape(m_sub, dsub)
-                    luts[qid] = (
-                        np.einsum("md,mkd->mk", qs, CB),
-                        float(np.sqrt((qv ** 2).sum())),
-                    )
-                lut, qn = luts[qid]
-                cc = codes[sel]
-                dots = lut[np.arange(m_sub)[None, :], cc].sum(axis=1)
-                denom = qn * recon[sel]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out_scores[sel] = np.where(denom > 0, dots / denom, 0.0)
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"].values,
-                "neighbor_id": pdf["neighbor_id"].values,
-                "adc_score": out_scores,
-            })
-
-    adc_scored = cand.mapInPandas(
-        adc, schema="query_id long, neighbor_id long, adc_score double"
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    shortlist = (
-        adc_scored.withColumn("__r", F.row_number().over(w_adc))
-        .where(F.col("__r") <= max(rerank, k))
-        .select("query_id", "neighbor_id")
-    )
-    # exact rescore of the shortlist only: broadcast the ≤ rerank·|q|
-    # candidate ids onto the corpus (corpus side never shuffles)
-    exact = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(q_vecs), "query_id")
-        .select(
-            "query_id", "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _pq_search(
+        _probe_join(encoded, probes), CB, k=k, rerank=rerank, corpus=corpus,
+        q_vecs=q_vecs, id_col=id_col, vec_col=vec_col,
     )

@@ -31,50 +31,43 @@ assignment ties go to the lower cell id; search output carries the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from replicadb_spark.functions.similarity import (
+    _collect_centroid_matrix,
+    _pq_codebook,
+    _pq_encode_cells,
+    _pq_sample,
+    _pq_search,
+    _probe_join,
+    _probe_side,
+    _top_k,
+    assign_cells_kernel,
+    coarse_centroids,
+    cosine,
+)
 
-def _assign(df: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """corpus → (id, cell, vec) via the collected-argmax Arrow kernel
-    (the dedup.semantic_dedup shape): the bounded codebook rides the
-    closure, assignment is a per-batch matmul argmax with ties to the
-    lower cell id — ZERO exchanges on the corpus."""
-    import numpy as np
 
-    crows = cents.orderBy("cell").collect()
-    cell_ids = np.array([r["cell"] for r in crows])
-    C = np.array([r["cent_vec"] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = C / cn[:, None]
-
-    id_t = dict(df.dtypes)[id_col]
-    vec_t = df.schema[vec_col].dataType.simpleString()
-
-    def assign_local(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            S = (M / mn[:, None]) @ Cn.T
-            # argmax returns the FIRST maximal column; columns are
-            # cell-id ordered, so ties go to the lower cell id
-            yield pd.DataFrame(
-                {
-                    "__vid": pdf["__vid"],
-                    "cell": cell_ids[S.argmax(axis=1)],
-                    "__v": pdf["__v"],
-                }
-            )
-
-    return df.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
-    ).mapInPandas(assign_local, schema=f"__vid {id_t}, cell int, __v {vec_t}")
+def _write_cells(
+    vecs: DataFrame, path: str, mode: str, id_col: str, vec_col: str, CB=None
+) -> None:
+    """Assign ``vecs`` against the persisted coarse codebook with the
+    shared zero-shuffle kernel and write them into their cell
+    partitions: the raw vectors, or — given a PQ codebook ``CB`` — only
+    their (codes, recon_norm)."""
+    _, cells, Cn = _collect_centroid_matrix(
+        vecs.sparkSession.read.parquet(f"{path}/codebook")
+    )
+    if CB is None:
+        out = assign_cells_kernel(
+            vecs, cells, Cn, id_col=id_col, vec_col=vec_col, keep_vec=True
+        ).toDF(id_col, "cell", vec_col)
+    else:
+        out = _pq_encode_cells(
+            vecs, cells, Cn, CB, id_col=id_col, vec_col=vec_col
+        ).withColumnRenamed("__vid", id_col)
+    out.write.mode(mode).partitionBy("cell").parquet(f"{path}/cells")
 
 
 def build_ivf_index(
@@ -88,20 +81,12 @@ def build_ivf_index(
 ) -> None:
     """Materialize the IVF layout: ``path/codebook`` (n_cells rows) and
     ``path/cells`` partitioned by cell."""
-    from replicadb_spark.functions.similarity import coarse_centroids
-
     cents = coarse_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
         lloyd_iters=lloyd_iters,
     )
     cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
-    spark = corpus.sparkSession
-    saved = spark.read.parquet(f"{path}/codebook")
-    _assign(corpus, saved, id_col, vec_col).withColumnRenamed(
-        "__vid", id_col
-    ).withColumnRenamed("__v", vec_col).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
+    _write_cells(corpus, path, "overwrite", id_col, vec_col)
 
 
 def append_to_ivf_index(
@@ -117,18 +102,13 @@ def append_to_ivf_index(
     stored vector type first — mixed float/double element types across
     part-files would fail every later scan."""
     spark = new_vecs.sparkSession
-    cents = spark.read.parquet(f"{path}/codebook")
     stored_t = (
         spark.read.parquet(f"{path}/cells")
         .schema[vec_col]
         .dataType.simpleString()
     )
     new_vecs = new_vecs.withColumn(vec_col, F.col(vec_col).cast(stored_t))
-    _assign(new_vecs, cents, id_col, vec_col).withColumnRenamed(
-        "__vid", id_col
-    ).withColumnRenamed("__v", vec_col).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
+    _write_cells(new_vecs, path, "append", id_col, vec_col)
 
 
 def compact_ivf_cells(
@@ -236,52 +216,37 @@ def _probe_frame(
     vec_col: str,
     n_probe: int,
 ):
-    """Shared probe-selection kernel: nearest-cells-per-query computed
-    INSIDE an Arrow batch against the broadcast-size codebook. Returns
-    (qdf, qprobe, probe_ids) — query (id, vec) frame, (query_id, cell)
-    probe pairs, and the distinct probed cell ids (≤ n_cells ints, the
-    only driver-side collect)."""
-    import numpy as np
-
-    cents = spark.read.parquet(f"{path}/codebook").orderBy("cell").collect()
-    C = np.array([r["cent_vec"] for r in cents], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = C / cn[:, None]
-    cell_ids = np.array([r["cell"] for r in cents])
-    n_take = min(n_probe, len(cell_ids))
-
-    id_t = dict(queries.dtypes)[id_col]
-    qdf = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    """Probe selection against the persisted codebook with the shared
+    assignment kernel. Returns (probes, probe_ids): the
+    (query_id, cell, q_vec) probe rows and the distinct probed cell ids
+    (≤ n_cells ints, the only driver-side collect)."""
+    _, cells, Cn = _collect_centroid_matrix(spark.read.parquet(f"{path}/codebook"))
+    probes = _probe_side(
+        queries, cells, Cn, id_col=id_col, vec_col=vec_col, n_probe=n_probe
     )
-
-    def pick_probes(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(pdf["qv"].tolist(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            S = (M / mn[:, None]) @ Cn.T
-            # stable argsort over score desc: columns ascend by cell
-            # id, so ties resolve to the lower cell (the build-side
-            # tie rule)
-            order = np.argsort(-S, axis=1, kind="stable")[:, :n_take]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy().repeat(n_take),
-                    "cell": cell_ids[order].ravel().astype("int32"),
-                }
-            )
-
-    qprobe = qdf.mapInPandas(pick_probes, schema=f"query_id {id_t}, cell int")
     probe_ids = sorted(
-        r["cell"] for r in qprobe.select("cell").distinct().collect()
+        r["cell"] for r in probes.select("cell").distinct().collect()
     )
-    return qdf, qprobe, probe_ids, id_t
+    return probes, probe_ids
+
+
+def _probed_cells(
+    spark: SparkSession, path: str, probe_ids: list, id_col: str
+) -> DataFrame:
+    """ONE pruned partitioned scan: ``cell IN (...)`` reaches
+    PartitionFilters, so only the probed cell directories are read."""
+    return (
+        spark.read.parquet(f"{path}/cells")
+        .where(F.col("cell").isin(probe_ids))
+        .withColumnRenamed(id_col, "neighbor_id")
+    )
+
+
+def _empty_result(spark: SparkSession, queries: DataFrame, id_col: str) -> DataFrame:
+    id_t = dict(queries.dtypes)[id_col]
+    return spark.createDataFrame(
+        [], f"query_id {id_t}, neighbor_id {id_t}, score double"
+    )
 
 
 def search_ivf_index(
@@ -305,56 +270,41 @@ def search_ivf_index(
     n_cells ints — are collected to build the partition-pruning
     literal. Query vectors never touch the driver, so the batch can be
     arbitrarily large. An empty query batch returns an empty frame."""
-    qdf, qprobe, probe_ids, id_t = _probe_frame(
-        spark, path, queries, id_col, vec_col, n_probe
-    )
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, score double"
+    probes, probe_ids = _probe_frame(spark, path, queries, id_col, vec_col, n_probe)
     if not probe_ids:
-        return spark.createDataFrame([], out_schema)
+        return _empty_result(spark, queries, id_col)
 
-    cells = spark.read.parquet(f"{path}/cells").where(
-        F.col("cell").isin(probe_ids)
-    )
-    qside = qdf.join(qprobe, "query_id")
-    scored = (
-        cells.join(F.broadcast(qside), "cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            (
-                F.aggregate(
-                    F.zip_with(vec_col, "qv", lambda a, b: a * b),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.greatest(
-                    F.sqrt(
-                        F.aggregate(
-                            F.transform(vec_col, lambda x: x * x),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
+    cand = _probe_join(_probed_cells(spark, path, probe_ids, id_col), probes)
+    scored = cand.select(
+        "query_id",
+        "neighbor_id",
+        (
+            F.aggregate(
+                F.zip_with(vec_col, "q_vec", lambda a, b: a * b),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            / F.greatest(
+                F.sqrt(
+                    F.aggregate(
+                        F.transform(vec_col, lambda x: x * x),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
                     )
-                    * F.sqrt(
-                        F.aggregate(
-                            F.transform("qv", lambda x: x * x),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                    ),
-                    F.lit(1e-12),
                 )
-            ).alias("score"),
-        )
+                * F.sqrt(
+                    F.aggregate(
+                        F.transform("q_vec", lambda x: x * x),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    )
+                ),
+                F.lit(1e-12),
+            )
+        ).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 6).alias("score"))
+    return _top_k(scored, k).select(
+        "query_id", "neighbor_id", F.round("score", 6).alias("score")
     )
 
 
@@ -366,80 +316,12 @@ def search_ivf_index(
 # ---------------------------------------------------------------------------
 
 
-def _pq_codebook(
-    corpus: DataFrame, id_col: str, vec_col: str, ks: int, seed: int
-) -> "list":
-    """ks hash-sampled corpus vectors — the same constant-size,
-    deterministic pick as functions/similarity.ann_ivf_pq (one bounded
-    driver collect, ≤ ks rows regardless of corpus size)."""
-    return (
-        corpus.select(
-            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(ks))
-            .cast("int")
-            .alias("b"),
-            F.struct(
-                F.xxhash64(F.col(id_col), F.lit(seed + 1)).alias("__h"),
-                F.col(id_col).alias("__sid"),
-                F.col(vec_col).alias("__sv"),
-            ).alias("__pick"),
-        )
-        .groupBy("b")
-        .agg(F.min("__pick").alias("__pick"))
-        .select(F.col("b"), F.col("__pick.__sv").alias("sv"))
-        .collect()
-    )
-
-
 def _load_pq(spark: SparkSession, path: str):
-    """(CB (m_sub, ks_eff, dsub), cb_norms_sq, m_sub, dsub) from the
-    persisted pq_codebook + pq_meta sidecars."""
-    import numpy as np
-
-    meta = spark.read.parquet(f"{path}/pq_meta").first()
-    m_sub, dim = meta["m_sub"], meta["dim"]
+    """The (m_sub, ks_eff, dsub) PQ codebook from the persisted
+    pq_codebook + pq_meta sidecars."""
+    m_sub = spark.read.parquet(f"{path}/pq_meta").first()["m_sub"]
     rows = spark.read.parquet(f"{path}/pq_codebook").orderBy("b").collect()
-    S_ = np.array([r["sv"] for r in rows], dtype=np.float64)
-    dsub = dim // m_sub
-    CB = np.ascontiguousarray(
-        S_.reshape(len(S_), m_sub, dsub).transpose(1, 0, 2)
-    )
-    return CB, (CB**2).sum(axis=2), m_sub, dsub
-
-
-def _encode_pq(df: DataFrame, CB, cb_norms_sq, id_col: str, vec_col: str):
-    """(id, vec) → (id, codes, recon_norm) via the vectorized
-    subvector-argmin kernel (no corpus shuffle; codebook rides the
-    closure)."""
-    import numpy as np
-
-    m_sub = CB.shape[0]
-    dsub = CB.shape[2]
-    id_t = dict(df.dtypes)[id_col]
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            Xs = X.reshape(len(X), m_sub, dsub)
-            dots = np.einsum("nmd,mkd->nmk", Xs, CB)
-            code = (cb_norms_sq[None, :, :] - 2.0 * dots).argmin(axis=2)
-            recon_sq = cb_norms_sq[np.arange(m_sub)[None, :], code].sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "__vid": pdf["__vid"].values,
-                    "codes": list(code.astype(np.int32)),
-                    "recon_norm": np.sqrt(recon_sq),
-                }
-            )
-
-    return df.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
-    ).mapInPandas(
-        encode, schema=f"__vid {id_t}, codes array<int>, recon_norm double"
-    )
+    return _pq_codebook([r["sv"] for r in rows], m_sub)
 
 
 def build_ivf_pq_index(
@@ -462,13 +344,10 @@ def build_ivf_pq_index(
     (~70 B parquet-encoded; int8-width codes once ks ≤ 256 dictionary-
     encode far smaller). Search reads n_probe/n_cells of THAT.
 
-    Citation: the in-memory twin is functions/similarity.ann_ivf_pq
-    (same deterministic codebooks, same encode kernel); this module
-    persists its stages the way build_ivf_index persists ann_ivf."""
-    import numpy as np
-
-    from replicadb_spark.functions.similarity import coarse_centroids
-
+    Citation: this is functions/similarity.ann_ivf_pq with parquet
+    between its steps — the same code samples the codebook, encodes,
+    assigns cells, scores with ADC and reranks; this module only
+    persists the stages the way build_ivf_index persists ann_ivf."""
     spark = corpus.sparkSession
     cents = coarse_centroids(
         corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
@@ -476,25 +355,16 @@ def build_ivf_pq_index(
     )
     cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
 
-    sample = _pq_codebook(corpus, id_col, vec_col, ks, seed)
-    dim = len(sample[0]["sv"])
-    if dim % m_sub:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+    sample = _pq_sample(corpus, id_col, vec_col, ks, seed)
+    CB = _pq_codebook([r["sv"] for r in sample], m_sub)
     spark.createDataFrame(
         [(r["b"], [float(x) for x in r["sv"]]) for r in sample],
         "b int, sv array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/pq_codebook")
     spark.createDataFrame(
-        [(m_sub, ks, dim)], "m_sub int, ks int, dim int"
+        [(m_sub, ks, CB.shape[0] * CB.shape[2])], "m_sub int, ks int, dim int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/pq_meta")
-
-    CB, cb_norms_sq, m_sub, _dsub = _load_pq(spark, path)
-    saved_cents = spark.read.parquet(f"{path}/codebook")
-    codes = _encode_pq(corpus, CB, cb_norms_sq, id_col, vec_col)
-    cells = _assign(corpus, saved_cents, id_col, vec_col).select("__vid", "cell")
-    codes.join(cells, "__vid").withColumnRenamed("__vid", id_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{path}/cells")
+    _write_cells(corpus, path, "overwrite", id_col, vec_col, CB)
 
 
 def append_to_ivf_pq_index(
@@ -508,14 +378,8 @@ def append_to_ivf_pq_index(
     and PQ-encode the new vectors, append into touched cell partitions
     (same operational contract as append_to_ivf_index — rebuild when
     the recall gate drops)."""
-    spark = new_vecs.sparkSession
-    cents = spark.read.parquet(f"{path}/codebook")
-    CB, cb_norms_sq, _m, _d = _load_pq(spark, path)
-    codes = _encode_pq(new_vecs, CB, cb_norms_sq, id_col, vec_col)
-    cells = _assign(new_vecs, cents, id_col, vec_col).select("__vid", "cell")
-    codes.join(cells, "__vid").withColumnRenamed("__vid", id_col).write.mode(
-        "append"
-    ).partitionBy("cell").parquet(f"{path}/cells")
+    CB = _load_pq(new_vecs.sparkSession, path)
+    _write_cells(new_vecs, path, "append", id_col, vec_col, CB)
 
 
 def search_ivf_pq_index(
@@ -539,104 +403,23 @@ def search_ivf_pq_index(
     (id, codes, recon_norm)); ADC is one Arrow kernel with a per-query
     (m_sub × ks) LUT; the rerank joins a broadcast shortlist of
     ≤ rerank·|queries| ids against the corpus — the corpus itself
-    never shuffles. Empty query batches return an empty frame."""
-    import numpy as np
-
-    CB, _cbn, m_sub, dsub = _load_pq(spark, path)
-    qdf, qprobe, probe_ids, id_t = _probe_frame(
-        spark, path, queries, id_col, vec_col, n_probe
-    )
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, score double"
+    never shuffles. ADC and rerank are functions/similarity.ann_ivf_pq's
+    own steps; this projection rounds scores to 6 dp and drops the rank.
+    Empty query batches return an empty frame."""
+    CB = _load_pq(spark, path)
+    probes, probe_ids = _probe_frame(spark, path, queries, id_col, vec_col, n_probe)
     if not probe_ids:
-        return spark.createDataFrame([], out_schema)
+        return _empty_result(spark, queries, id_col)
 
-    cells = spark.read.parquet(f"{path}/cells").where(
-        F.col("cell").isin(probe_ids)
+    q_vecs = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    qside = qdf.join(qprobe, "query_id")
-    cand = (
-        cells.join(F.broadcast(qside), "cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "codes",
-            "recon_norm",
-            "qv",
-        )
+    out = _pq_search(
+        _probe_join(_probed_cells(spark, path, probe_ids, id_col), probes),
+        CB, k=k, rerank=rerank, corpus=corpus if rerank > 0 else None,
+        q_vecs=q_vecs, id_col=id_col, vec_col=vec_col,
     )
-
-    def adc(batches):
-        import pandas as pd
-
-        luts: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = np.empty(len(pdf), dtype=np.float64)
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            recon = pdf["recon_norm"].values
-            qids = pdf["query_id"].values
-            for qid in pd.unique(qids):
-                sel = qids == qid
-                if qid not in luts:
-                    qv = np.array(pdf["qv"].values[sel][0], dtype=np.float64)
-                    luts[qid] = (
-                        np.einsum("md,mkd->mk", qv.reshape(m_sub, dsub), CB),
-                        float(np.sqrt((qv**2).sum())),
-                    )
-                lut, qn = luts[qid]
-                dots = lut[np.arange(m_sub)[None, :], codes[sel]].sum(axis=1)
-                denom = qn * recon[sel]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out[sel] = np.where(denom > 0, dots / denom, 0.0)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].values,
-                    "neighbor_id": pdf["neighbor_id"].values,
-                    "score": out,
-                }
-            )
-
-    scored = cand.mapInPandas(adc, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    if rerank <= 0 or corpus is None:
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select(
-                "query_id", "neighbor_id", F.round("score", 6).alias("score")
-            )
-        )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max(rerank, k))
-        .select("query_id", "neighbor_id")
-    )
-    from replicadb_spark.functions.similarity import cosine
-
-    exact = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-        )
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("c_vec")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 6).alias("score"))
-    )
+    return out.select("query_id", "neighbor_id", F.round("score", 6).alias("score"))
 
 
 def ivf_cell_stats(
@@ -660,8 +443,6 @@ def ivf_cell_stats(
     bounded listing compaction does; any Spark-readable URI)."""
     from replicadb_spark.fs import TableFS
     from replicadb_spark.fs import join as fs_join
-
-    from replicadb_spark.functions.similarity import cosine
 
     fs = TableFS(spark, path)
     counts: dict[int, int] = {}

@@ -1273,38 +1273,19 @@ def stream_semantic_dedup(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from replicadb_spark.functions.similarity import (
+        _centroid_matrix,
+        _unit_rows,
+        assign_cells_kernel,
+    )
+
     if not centroids:
         raise ValueError("centroids must be a non-empty collected codebook")
-    cell_ids = np.array([c for c, _ in centroids])
-    C = np.array([v for _, v in centroids], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0.0] = 1.0
-    Cn = C / cn[:, None]
-
+    cell_ids, Cn = _centroid_matrix(centroids)
+    assigned = assign_cells_kernel(
+        stream, cell_ids, Cn, id_col=id_col, vec_col=vec_col, keep_vec=True
+    )
     id_t = dict(stream.dtypes)[id_col]
-    vec_t = stream.schema[vec_col].dataType.simpleString()
-
-    def assign_local(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            S = (M / mn[:, None]) @ Cn.T
-            yield pd.DataFrame(
-                {
-                    "__vid": pdf["__vid"],
-                    "cell": cell_ids[S.argmax(axis=1)],
-                    "__v": pdf["__v"],
-                }
-            )
-
-    assigned = stream.select(
-        F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v")
-    ).mapInPandas(assign_local, schema=f"__vid {id_t}, cell int, __v {vec_t}")
 
     out_schema = f"id {id_t}, cell int, kept boolean, saturated boolean"
     state_schema = "kept_vecs array<array<double>>, n_kept int"
@@ -1326,10 +1307,7 @@ def stream_semantic_dedup(
         pdf = pd.concat(chunks, ignore_index=True).sort_values(
             "__vid"
         ).reset_index(drop=True)
-        M = np.array(pdf["__v"].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(M, axis=1)
-        nrm[nrm == 0.0] = 1.0  # zero vectors are similar to nothing
-        M = M / nrm[:, None]
+        M = _unit_rows(np.array(pdf["__v"].tolist(), dtype=np.float64))
         kept_flags, sat_flags = [], []
         K = (
             np.array(kept_list, dtype=np.float64)

@@ -60,11 +60,6 @@ def schema_from_declared_types(names: list[str], type_names: list[str]) -> T.Str
 
 # --- scalar transforms T1-T11 as Column expressions -----------------------
 
-def clob_to_string(col: Column) -> Column:
-    """T1/T2 (SqlManager.java:536-570)."""
-    return col.cast("string")
-
-
 def binary_to_hex(col: Column, prefix: str = "\\x") -> Column:
     """T3 — Postgres COPY hex form ``\\x<hex>`` (PostgresqlManager.java:363-393).
 
@@ -120,11 +115,6 @@ def epoch_millis_to_timestamp(col: Column) -> Column:
 def epoch_micros_to_timestamp(col: Column) -> Column:
     """T9 (time/Conversions.java:62-91)."""
     return F.timestamp_micros(col.cast("long"))
-
-
-def struct_to_json(*cols: Column) -> Column:
-    """T10 — BSON document/array → JSON string (BsonUtils.java:11-49)."""
-    return F.to_json(F.struct(*cols))
 
 
 def quote_identifier(name: str, quote: str = '"') -> str:

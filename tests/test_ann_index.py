@@ -196,18 +196,24 @@ def test_compact_ivf_cells_merges_files_and_preserves_results(spark, tmp_path):
     assert not [d for d in os.listdir(path) if d.startswith("__")]
 
 
-def test_ivf_pq_layout_stores_codes_not_vectors(spark, tmp_path):
+@pytest.fixture(scope="module")
+def pq_index(spark, tmp_path_factory):
+    """One read-only IVF-PQ layout shared by the tests that only search it."""
+    from replicadb_spark.operators.ann_index import build_ivf_pq_index
+
+    path = str(tmp_path_factory.mktemp("ivf_pq") / "pq_idx")
+    corpus = spark.read.parquet(f"{SF}/embeddings.parquet")
+    build_ivf_pq_index(corpus, path, n_cells=8, m_sub=16, ks=32)
+    return path, corpus
+
+
+def test_ivf_pq_layout_stores_codes_not_vectors(spark, pq_index):
     """The PQ layout's scan-bytes contract: cells hold (id, codes,
     recon_norm) only — no raw embedding column anywhere in the layout —
     and the probed scan still prunes partitions."""
-    from replicadb_spark.operators.ann_index import (
-        build_ivf_pq_index,
-        search_ivf_pq_index,
-    )
+    from replicadb_spark.operators.ann_index import search_ivf_pq_index
 
-    path = str(tmp_path / "pq_idx")
-    corpus = spark.read.parquet(f"{SF}/embeddings.parquet")
-    build_ivf_pq_index(corpus, path, n_cells=8, m_sub=16, ks=32)
+    path, corpus = pq_index
     cells = spark.read.parquet(f"{path}/cells")
     assert set(cells.columns) == {"vec_id", "codes", "recon_norm", "cell"}
     assert cells.count() == corpus.count()
@@ -224,18 +230,13 @@ def test_ivf_pq_layout_stores_codes_not_vectors(spark, tmp_path):
     assert res.count() > 0
 
 
-def test_ivf_pq_rerank_recall_vs_bruteforce(spark, tmp_path):
+def test_ivf_pq_rerank_recall_vs_bruteforce(spark, pq_index):
     """ADC + exact rerank hits the ann_ivfpq gate's recall bound (0.7)
     through the PERSISTED layout."""
     from replicadb_spark.functions.similarity import knn_bruteforce
-    from replicadb_spark.operators.ann_index import (
-        build_ivf_pq_index,
-        search_ivf_pq_index,
-    )
+    from replicadb_spark.operators.ann_index import search_ivf_pq_index
 
-    path = str(tmp_path / "pq_idx")
-    corpus = spark.read.parquet(f"{SF}/embeddings.parquet")
-    build_ivf_pq_index(corpus, path, n_cells=8, m_sub=16, ks=32)
+    path, corpus = pq_index
     queries = corpus.where(F.col("vec_id") < 5)
     got = {
         (r["query_id"], r["neighbor_id"])
@@ -249,6 +250,33 @@ def test_ivf_pq_rerank_recall_vs_bruteforce(spark, tmp_path):
     }
     recall = len(got & exact) / len(exact)
     assert recall >= 0.7, recall
+
+
+def test_ivf_pq_in_memory_equals_persisted(spark, pq_index):
+    """In-memory ann_ivf_pq and the persisted build_ivf_pq_index +
+    search_ivf_pq_index(rerank, corpus) compose the same quantizer
+    steps (codebook sample, encode, assign, ADC, rerank), so they
+    return the same neighbor pairs."""
+    from replicadb_spark.functions.similarity import ann_ivf_pq
+    from replicadb_spark.operators.ann_index import search_ivf_pq_index
+
+    path, corpus = pq_index
+    queries = corpus.where(F.col("vec_id") < 20)
+    persisted = {
+        (r["query_id"], r["neighbor_id"])
+        for r in search_ivf_pq_index(
+            spark, path, queries, n_probe=6, k=10, rerank=100, corpus=corpus
+        ).collect()
+    }
+    in_memory = {
+        (r["query_id"], r["neighbor_id"])
+        for r in ann_ivf_pq(
+            corpus, queries, n_cells=8, n_probe=6, k=10, m_sub=16, ks=32,
+            rerank=100,
+        ).collect()
+    }
+    assert len(persisted) == 20 * 10
+    assert persisted == in_memory
 
 
 def test_ivf_pq_append_then_search_finds_clone(spark, tmp_path):

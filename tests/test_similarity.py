@@ -184,6 +184,38 @@ def test_knn_matmul_matches_expression_fold(spark):
                 assert g_score == pytest.approx(score, abs=1e-9)
 
 
+def test_knn_scores_independent_of_batch_composition(spark):
+    """An exact copy of a corpus row scores bit-identically to its
+    source wherever it sits, so the id tiebreak decides their order.
+    The copy (id 300 of row 5) is alone in a 1-row partition while its
+    source shares a 100-row Arrow batch: a batch-shaped BLAS product
+    gave the two different last-ulp scores there, and the copy often
+    outranked its source."""
+    import random
+
+    rng = random.Random(11)
+    base = [(i, [rng.uniform(-1.0, 1.0) for _ in range(64)]) for i in range(300)]
+    parts = [base[0:100], base[100:200], base[200:300], [(300, list(base[5][1]))]]
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+    ])
+    corpus = spark.createDataFrame(
+        spark.sparkContext.parallelize(range(4), 4).flatMap(lambda i: parts[i]),
+        schema,
+    )
+    queries = corpus.where(F.col("vec_id").between(20, 25))
+    out = S.knn_bruteforce(corpus, queries, k=301).collect()
+    by_q: dict = {}
+    for r in out:
+        by_q.setdefault(r["query_id"], {})[r["neighbor_id"]] = (r["score"], r["rank"])
+    assert len(by_q) == 6
+    for qid, hits in by_q.items():
+        (s5, r5), (s300, r300) = hits[5], hits[300]
+        assert s5 == s300, (qid, s5, s300)
+        assert r5 < r300, (qid, r5, r300)
+
+
 def test_knn_null_scores_rank_last(spark):
     """Zero-norm corpus vectors score NULL (try_divide) and must sort
     after every finite score — with a corpus small enough that the
@@ -400,10 +432,34 @@ def test_semantic_dedup_with_lloyd_refinement(spark):
     assert removed <= covered
 
 
+def assign_cells(df, centroids, *, id_col="vec_id", vec_col="embedding", top=1):
+    """In-test REFERENCE for the nearest-cell rule: crossJoin the
+    broadcast centroid table, score with the JVM cosine fold and keep
+    each vector's ``top`` cells by (cosine desc, cell asc) through a
+    per-vector window. Returns DataFrame(__vid, cell)."""
+    from pyspark.sql import Window
+
+    w_cell = Window.partitionBy("__vid").orderBy(
+        F.col("__cscore").desc(), F.col("cell").asc()
+    )
+    scored = (
+        df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            "__vid", "cell", S.cosine(F.col("__v"), F.col("cent_vec")).alias("__cscore")
+        )
+    )
+    return (
+        scored.withColumn("__r", F.row_number().over(w_cell))
+        .where(F.col("__r") <= top)
+        .select("__vid", "cell")
+    )
+
+
 def test_assign_kernel_matches_window_path(spark):
-    """r18: ann_ivf/ann_ivf_pq assign through the collected-matrix
+    """Every quantizer consumer assigns through the collected-matrix
     Arrow argmax kernel (assign_cells_kernel); the window-shaped
-    assign_cells stays as the lazy API and the in-test REFERENCE. Both
+    assign_cells above is its in-test REFERENCE. Both
     paths must pick identical cell sets — top-1 and top-k, including
     duplicate vectors (exact score ties across cells resolve to the
     lower cell id on both paths) and the zero vector (NULL cosine
@@ -415,7 +471,6 @@ def test_assign_kernel_matches_window_path(spark):
 
     from replicadb_spark.functions.similarity import (
         _collect_centroid_matrix,
-        assign_cells,
         assign_cells_kernel,
         coarse_centroids,
     )

@@ -11,12 +11,13 @@ Usage: python tools/compare_oracle.py [--first N] [--json OUT] [sf_dir] [query .
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
