@@ -39,9 +39,12 @@ Design notes (mirrors Delta's LogStore contract):
   manifest stores these strings, Spark reads them back, and set
   operations (victim pruning, GC set-difference) compare equal — no
   ``file:/`` vs ``/`` representation drift.
-- **Executor-side data access stays in pyarrow** (``pyarrow_open`` /
-  ``pyarrow_fs_for``): footer reads, stat calls and GC deletes run
-  distributed inside Arrow tasks where the JVM gateway does not exist.
+- **File bytes go through pyarrow** (``pyarrow_open`` /
+  ``pyarrow_fs_for``), on the driver and in executors alike: manifest
+  reads and writes, the new data directory's listing and its footer
+  reads run on the driver (operators/manifest); GC's per-directory
+  listings and deletes run inside Arrow tasks, where the JVM gateway
+  does not exist.
 
 The reference hands this durability problem to the sink database
 (SqlManager.java:404-434 swaps sink tables inside one transaction);

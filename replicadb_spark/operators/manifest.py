@@ -1,12 +1,20 @@
-"""File-skipping manifest: per-file column statistics as a DataFrame.
+"""File-skipping manifest: per-file column statistics.
 
 Parquet already stores min/max per row group; what a 100 TB table needs
 is those stats OUTSIDE the files, so a planner (or a job submitting
 loop) can select the files worth scanning without opening any of them —
-the core mechanism of lakehouse table formats' data skipping. This
-operator builds that manifest with Spark itself: the file list is
-parallelized and each task reads ONLY footers (pyarrow metadata, no row
-data), so manifest cost is O(files), not O(bytes).
+the core mechanism of lakehouse table formats' data skipping.
+
+A manifest is driver metadata: one row per data file per stat column
+(``file, n_rows, column, min_s, max_s, n_nulls``), a few KB per commit.
+So it is built, read, filtered, unioned and written on the DRIVER as one
+pyarrow table — no Spark job touches a manifest on a snapshot commit.
+Building one is one recursive listing of the data directory plus one
+footer read per file (parquet metadata only, no row data): cost is
+O(files), not O(bytes). Footers of 1,000 local 100-row files take
+0.046 s on a 4-core VM; on an object store each footer is a sequential
+GET whose latency is unverified, and the driver holds O(files × stat
+columns) rows.
 
 Pairs with ``ordering.zorder_layout``: cluster first, manifest once,
 then ``prune_files`` turns a box predicate into the small file subset
@@ -14,105 +22,231 @@ whose stats intersect it. Correctness contract: pruning never drops a
 file that could contain a matching row (stats are conservative), so
 scan(pruned) ∩ predicate == scan(all) ∩ predicate — tested.
 
-All path I/O goes through replicadb_spark.fs (Hadoop FileSystem on the
-driver, pyarrow filesystems in the executors), so the manifest works on
-any Spark-readable URI, not just the driver's local disk.
+Every byte goes through ``replicadb_spark.fs.pyarrow_fs_for``, so the
+manifest works on any URI pyarrow can open, not just the driver's local
+disk; stored manifests stay plain parquet that ``spark.read`` reads.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from replicadb_spark.fs import TableFS, join, pyarrow_open
+from replicadb_spark.fs import pyarrow_fs_for, pyarrow_open
+
+# n_nulls arrived in round 10; manifests written before then read back
+# with a null n_nulls — every consumer treats unknown as not-excludable
+MANIFEST_DDL = (
+    "file string, n_rows long, column string, "
+    "min_s string, max_s string, n_nulls long"
+)
+MANIFEST_SCHEMA = pa.schema([
+    ("file", pa.string()), ("n_rows", pa.int64()), ("column", pa.string()),
+    ("min_s", pa.string()), ("max_s", pa.string()), ("n_nulls", pa.int64()),
+])
+
+
+def list_parquet(path: str) -> "list[str]":
+    """Every visible parquet file under ``path`` at any depth (part
+    files, ``bkt=K/`` and partition subdirectories), sorted, in the
+    caller's own prefix form — one recursive listing. Missing → [].
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, ``_temporary/``,
+    checksums) are skipped, as Spark's own reader skips them."""
+    import pyarrow.fs as pafs
+
+    pfs, local = pyarrow_fs_for(path)
+    local = local.rstrip("/")
+    sel = pafs.FileSelector(local, recursive=True, allow_not_found=True)
+    root = path.rstrip("/")
+    out = []
+    for info in pfs.get_file_info(sel):
+        rel = info.path[len(local):].lstrip("/")
+        if (
+            info.is_file
+            and rel.endswith(".parquet")
+            and not any(p.startswith(("_", ".")) for p in rel.split("/"))
+        ):
+            out.append(f"{root}/{rel}")
+    return sorted(out)
+
+
+def read_footers(
+    files: "list[str]", columns: "list[str] | None" = None
+) -> pa.Table:
+    """The manifest rows of ``files`` from their parquet footers, read
+    on the driver. min/max are stringified (heterogeneous column types
+    stack in one schema; numeric compare re-casts on use); ``n_nulls``
+    is the column's exact null count when every row group records one,
+    else null (unknown ≠ zero). A column that is entirely null in a file
+    still gets a row (null min/max, n_nulls == n_rows) — that row is
+    what IS-NOT-NULL pruning skips on."""
+    out: dict = {f.name: [] for f in MANIFEST_SCHEMA}
+    for fname in files:
+        md = pq.ParquetFile(pyarrow_open(fname)).metadata
+        lo: dict = {}
+        hi: dict = {}
+        nul: dict = {}  # name -> exact count, or None once unknown
+        bad_mm: set = set()  # min/max not covering every row group
+        for rg in range(md.num_row_groups):
+            row = md.row_group(rg)
+            for ci in range(row.num_columns):
+                col = row.column(ci)
+                name = col.path_in_schema
+                if columns is not None and name not in columns:
+                    continue
+                st = col.statistics
+                if st is None:
+                    nul[name] = None
+                    bad_mm.add(name)
+                    continue
+                if st.null_count is None or nul.get(name, 0) is None:
+                    nul[name] = None
+                else:
+                    nul[name] = nul.get(name, 0) + st.null_count
+                if not st.has_min_max:
+                    # all-null row group: contributes no values, so
+                    # existing min/max still cover the file
+                    if st.null_count != row.num_rows:
+                        bad_mm.add(name)
+                    continue
+                lo[name] = min(lo[name], st.min) if name in lo else st.min
+                hi[name] = max(hi[name], st.max) if name in hi else st.max
+        for name in sorted(set(lo) | set(nul)):
+            ok = name in lo and name not in bad_mm
+            out["file"].append(fname)
+            out["n_rows"].append(md.num_rows)
+            out["column"].append(name)
+            out["min_s"].append(str(lo[name]) if ok else None)
+            out["max_s"].append(str(hi[name]) if ok else None)
+            out["n_nulls"].append(nul.get(name))
+    return pa.table(out, schema=MANIFEST_SCHEMA)
+
+
+def _conform(t: pa.Table) -> pa.Table:
+    """``t`` in the 6-column manifest layout: legacy 5-column manifests
+    gain a null ``n_nulls``, Spark-written types cast to the schema's."""
+    return pa.table(
+        [
+            t.column(f.name).cast(f.type)
+            if f.name in t.column_names
+            else pa.nulls(t.num_rows, f.type)
+            for f in MANIFEST_SCHEMA
+        ],
+        schema=MANIFEST_SCHEMA,
+    )
+
+
+def read_manifest(mpath: str) -> pa.Table:
+    """A stored manifest directory as one Arrow table: the single part
+    file :func:`write_manifest` stores, or a legacy Spark write of
+    several part files (including the pre-``n_nulls`` 5-column layout)."""
+    return pa.concat_tables(
+        [MANIFEST_SCHEMA.empty_table()]
+        + [
+            _conform(pq.ParquetFile(pyarrow_open(p)).read())
+            for p in list_parquet(mpath)
+        ]
+    )
+
+
+def write_manifest(t: pa.Table, mpath: str) -> None:
+    """Store ``t`` as the manifest directory ``mpath`` holding one part
+    file — the layout ``spark.read.parquet(mpath)`` has always read."""
+    pfs, local = pyarrow_fs_for(mpath)
+    pfs.create_dir(local, recursive=True)
+    with pfs.open_output_stream(f"{local.rstrip('/')}/part-00000.parquet") as out:
+        pq.write_table(t, out)
+
+
+def drop_files(t: pa.Table, files: "list[str] | set[str]") -> pa.Table:
+    """``t`` without the rows of ``files`` (a copy-on-write's victims)."""
+    if not files:
+        return t
+    gone = pc.is_in(t.column("file"), value_set=pa.array(sorted(files), pa.string()))
+    return t.filter(pc.invert(gone))
+
+
+def manifest_files(t: pa.Table) -> "list[str]":
+    """The distinct data files a manifest makes visible, sorted."""
+    return sorted(pc.unique(t.column("file")).to_pylist())
+
+
+def manifest_columns(t: pa.Table) -> "list[str] | None":
+    """The stat columns a manifest carries (None when it has none — the
+    ``file_manifest`` spelling of "every column")."""
+    cols = [c for c in pc.unique(t.column("column")).to_pylist() if c is not None]
+    return sorted(cols) or None
 
 
 def file_manifest(
     spark: SparkSession,
     path: str,
-    columns: list[str] | None = None,
+    columns: "list[str] | None" = None,
 ) -> DataFrame:
     """(file, n_rows, column, min_s, max_s, n_nulls) for every parquet
-    part-file under ``path``. min/max are stringified (heterogeneous
-    column types stack in one schema; numeric compare re-casts on use);
-    ``n_nulls`` is the column's exact null count when every row group
-    records one, else null (unknown ≠ zero). A column that is entirely
-    null in a file still gets a row (null min/max, n_nulls == n_rows) —
-    that row is what IS-NOT-NULL pruning skips on.
-
-    The directory listing is driver-side metadata (same as Spark's own
-    scan planning — one Hadoop glob round trip per nesting depth);
-    footer reads are distributed over the executors.
-    """
-    fs = TableFS(spark, path)
-    files: list[str] = []
-    pattern = join(path, "*.parquet")
-    for _ in range(8):  # bounded nesting: part files, then partition dirs
-        files.extend(f for f, _sz in fs.glob(pattern))
-        pattern = pattern[: -len("*.parquet")] + "*/*.parquet"
-    files = sorted(set(files))
+    part-file under ``path``, as a DataFrame over the driver-built Arrow
+    table (see :func:`read_footers` for the column semantics). Raises
+    when ``path`` holds no parquet files."""
+    files = list_parquet(path)
     if not files:
         raise ValueError(f"no parquet files under {path}")
-    fdf = spark.createDataFrame([(f,) for f in files], "file string")
+    return spark.createDataFrame(read_footers(files, columns), MANIFEST_DDL)
 
-    def read_footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
 
-        for pdf in batches:
-            out = {"file": [], "n_rows": [], "column": [],
-                   "min_s": [], "max_s": [], "n_nulls": []}
-            for fname in pdf["file"].values:
-                md = pq.ParquetFile(pyarrow_open(fname)).metadata
-                lo: dict = {}
-                hi: dict = {}
-                nul: dict = {}  # name -> exact count, or None once unknown
-                bad_mm: set = set()  # min/max not covering every row group
-                n_rows = md.num_rows
-                for rg in range(md.num_row_groups):
-                    row = md.row_group(rg)
-                    for ci in range(row.num_columns):
-                        col = row.column(ci)
-                        name = col.path_in_schema
-                        if columns is not None and name not in columns:
-                            continue
-                        st = col.statistics
-                        if st is None:
-                            nul[name] = None
-                            bad_mm.add(name)
-                            continue
-                        if st.null_count is None or nul.get(name, 0) is None:
-                            nul[name] = None
-                        else:
-                            nul[name] = nul.get(name, 0) + st.null_count
-                        if not st.has_min_max:
-                            # all-null row group: contributes no values,
-                            # so existing min/max still cover the file
-                            if st.null_count != row.num_rows:
-                                bad_mm.add(name)
-                            continue
-                        lo[name] = min(lo[name], st.min) if name in lo else st.min
-                        hi[name] = max(hi[name], st.max) if name in hi else st.max
-                for name in sorted(set(lo) | set(nul)):
-                    ok = name in lo and name not in bad_mm
-                    out["file"].append(fname)
-                    out["n_rows"].append(n_rows)
-                    out["column"].append(name)
-                    out["min_s"].append(str(lo[name]) if ok else None)
-                    out["max_s"].append(str(hi[name]) if ok else None)
-                    out["n_nulls"].append(nul.get(name))
-            yield pd.DataFrame(out)
+def _as_table(manifest: "DataFrame | pa.Table") -> pa.Table:
+    """Pruning runs on the driver-side table; a DataFrame manifest (e.g.
+    ``snapshot_manifest``'s view) is collected first — it is O(files)
+    metadata by construction."""
+    if isinstance(manifest, pa.Table):
+        return manifest
+    return _conform(manifest.toArrow())
 
-    width = spark.sparkContext.defaultParallelism
-    return fdf.repartition(min(width, len(files))).mapInPandas(
-        read_footers,
-        schema="file string, n_rows long, column string, "
-               "min_s string, max_s string, n_nulls long",
-    )
+
+def _as_double(s: "str | None") -> "float | None":
+    """A stringified stat as a number, or None when it is not one (a
+    string/bytes column's stats). At least as strict as Spark's
+    ``try_cast(... AS double)``: digit separators, non-ASCII digits and
+    NaN are unknown, so a stat Spark would not order never excludes a
+    file."""
+    if s is None or "_" in s or not s.isascii():
+        return None
+    try:
+        v = float(s)
+    except ValueError:
+        return None
+    return None if v != v else v
+
+
+def stat_intervals(
+    manifest: pa.Table, column: str
+) -> "tuple[list[tuple[str, float, float]], list[str]]":
+    """``(known, unknown)`` for ``column``: ``(file, min, max)`` for every
+    file with numeric stats, and the files without (no stats row, or
+    stats that do not parse) — unknown ≠ excludable, so every consumer
+    keeps those files."""
+    rows = manifest.filter(pc.equal(manifest.column("column"), column))
+    stats = {
+        f: (_as_double(lo), _as_double(hi))
+        for f, lo, hi in zip(
+            rows.column("file").to_pylist(),
+            rows.column("min_s").to_pylist(),
+            rows.column("max_s").to_pylist(),
+        )
+    }
+    known, unknown = [], []
+    for f in manifest_files(manifest):
+        lo, hi = stats.get(f, (None, None))
+        if lo is None or hi is None:
+            unknown.append(f)
+        else:
+            known.append((f, lo, hi))
+    return known, unknown
 
 
 def prune_files(
-    manifest: DataFrame,
+    manifest: "DataFrame | pa.Table",
     column: str,
     lo: float,
     hi: float,
@@ -121,36 +255,15 @@ def prune_files(
     the candidate set a pruned scan reads. Conservative: a file with no
     stats row for the column is KEPT, and so is one whose stats do not
     parse as numbers (string/bytes column stringified by the manifest) —
-    unknown ≠ excludable, the cast-to-null must never drop a file.
-
-    The keep-set is computed entirely distributed (one left-join on the
-    manifest); the ONLY driver pull is the final pruned file list —
-    the bounded set a planner must hold anyway. At 10⁶ files × columns
-    nothing else reaches the driver.
-    """
-    stats = manifest.where(F.col("column") == column).select(
-        "file",
-        # try_cast, not cast: under ANSI mode a non-numeric stat (string
-        # column) would throw; here it must become null → file kept
-        F.col("min_s").try_cast("double").alias("mn"),
-        F.col("max_s").try_cast("double").alias("mx"),
-    )
-    keep = (
-        manifest.select("file")
-        .distinct()
-        .join(stats, "file", "left")
-        .where(
-            F.col("mn").isNull()          # no stats row, or unparseable min
-            | F.col("mx").isNull()        # unparseable max
-            | ((F.col("mx") >= lo) & (F.col("mn") <= hi))
-        )
-        .select("file")
-        .distinct()
-    )
-    return sorted(r.file for r in keep.collect())
+    unknown ≠ excludable (:func:`stat_intervals`)."""
+    known, unknown = stat_intervals(_as_table(manifest), column)
+    keep = [f for f, mn, mx in known if mx >= lo and mn <= hi]
+    return sorted(keep + unknown)
 
 
-def prune_files_not_null(manifest: DataFrame, column: str) -> list[str]:
+def prune_files_not_null(
+    manifest: "DataFrame | pa.Table", column: str
+) -> list[str]:
     """Files that may hold a NON-NULL value of ``column`` — the
     candidate set for an ``IS NOT NULL`` scan (the dominant filter of
     sparse/optional columns at 100 TB: files whose column is entirely
@@ -158,14 +271,15 @@ def prune_files_not_null(manifest: DataFrame, column: str) -> list[str]:
     dropped ONLY when its manifest row proves n_nulls == n_rows;
     missing rows, unknown null counts, and legacy manifests without
     the n_nulls column all keep the file."""
-    stats = manifest.where(F.col("column") == column).select(
-        "file", "n_rows", "n_nulls"
-    )
-    all_null = stats.where(
-        F.col("n_nulls").isNotNull() & (F.col("n_nulls") == F.col("n_rows"))
-    ).select("file")
-    keep = (
-        manifest.select("file").distinct()
-        .join(all_null, "file", "left_anti")
-    )
-    return sorted(r.file for r in keep.collect())
+    t = _as_table(manifest)
+    rows = t.filter(pc.equal(t.column("column"), column))
+    all_null = {
+        f
+        for f, n, nn in zip(
+            rows.column("file").to_pylist(),
+            rows.column("n_rows").to_pylist(),
+            rows.column("n_nulls").to_pylist(),
+        )
+        if nn is not None and nn == n
+    }
+    return [f for f in manifest_files(t) if f not in all_null]

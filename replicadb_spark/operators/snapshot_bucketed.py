@@ -46,18 +46,27 @@ from __future__ import annotations
 
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from replicadb_spark.fs import TableFS, join
-from replicadb_spark.operators.manifest import file_manifest
+from replicadb_spark.operators.manifest import (
+    drop_files,
+    list_parquet,
+    manifest_columns,
+    manifest_files,
+    read_footers,
+    write_manifest,
+)
 from replicadb_spark.operators.snapshot_table import (
-    _MANIFEST_SCHEMA,
     _manifest_path,
+    _manifest_table,
     _publish,
+    _read_record,
+    _require_tip,
     _resolve,
-    snapshot_manifest,
-    snapshot_record,
+    _tip,
 )
 from replicadb_spark.sinks.files import _bucket_of
 
@@ -111,22 +120,19 @@ def snapshot_commit_bucketed(
     through :func:`snapshot_upsert_bucketed`."""
     spark = df.sparkSession
     fs = TableFS(spark, path)
-    try:
-        parent = _resolve(fs, None)
-    except ValueError:
-        parent = None
-    if parent is not None:
-        prev = snapshot_record(path, parent)
-        if prev.get("n_buckets") not in (None, n_buckets):
-            raise ValueError(
-                f"table is bucketed INTO {prev['n_buckets']}; a commit with "
-                f"{n_buckets} would fork the layout"
-            )
+    parent, prev = _tip(fs, path)
+    if prev is not None and prev.get("n_buckets") not in (None, n_buckets):
+        raise ValueError(
+            f"table is bucketed INTO {prev['n_buckets']}; a commit with "
+            f"{n_buckets} would fork the layout"
+        )
     snap_id = (parent or 0) + 1
     data_dir = join(path, "data", f"snap-{snap_id:06d}")
     _write_bucket_files(spark, df, data_dir, list(bucket_cols), n_buckets)
-    new_m = file_manifest(spark, data_dir, stat_columns)
-    new_m.write.mode("overwrite").parquet(_manifest_path(path, snap_id))
+    write_manifest(
+        read_footers(list_parquet(data_dir), stat_columns),
+        _manifest_path(path, snap_id),
+    )
     _publish(fs, path, {
         "snapshot_id": snap_id,
         "parent_id": parent,
@@ -161,8 +167,7 @@ def snapshot_upsert_bucketed(
     if not pk_columns:
         raise ValueError("bucketed snapshot upsert requires pk columns")
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    rec = snapshot_record(path, parent)
+    parent, rec = _require_tip(fs, path)
     bucket_cols, n_buckets = rec.get("bucket_cols"), rec.get("n_buckets")
     if not bucket_cols:
         raise ValueError(
@@ -176,17 +181,16 @@ def snapshot_upsert_bucketed(
             f"bucket_cols {bucket_cols} must be a subset of pk_columns "
             f"{pk_columns}"
         )
-    m = snapshot_manifest(spark, path, parent)
-    files = sorted(r["file"] for r in m.select("file").distinct().collect())
+    m = _manifest_table(path, rec)
+    files = manifest_files(m)
     cols = spark.read.parquet(files[0]).columns if files else staging.columns
     missing = [c for c in cols if c not in staging.columns]
     if missing:
         raise ValueError(f"staging batch lacks table columns {missing}")
     touched = sorted(
-        r["b"]
-        for r in staging.select(
-            F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)).alias("b")
-        ).distinct().collect()
+        staging.agg(
+            F.collect_set(F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)))
+        ).first()[0]
     )
     touched_set = set(touched)
     victims = [
@@ -206,13 +210,10 @@ def snapshot_upsert_bucketed(
     snap_id = parent + 1
     data_dir = join(path, "data", f"snap-{snap_id:06d}")
     _write_bucket_files(spark, merged, data_dir, list(bucket_cols), n_buckets)
-    stat_cols = sorted(
-        r["column"] for r in m.select("column").distinct().collect()
-    ) or None
-    new_m = file_manifest(spark, data_dir, stat_cols)
-    kept = m.where(~F.col("file").isin(victims)) if victims else m
-    kept.unionByName(new_m).write.mode("overwrite").parquet(
-        _manifest_path(path, snap_id)
+    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+    write_manifest(
+        pa.concat_tables([drop_files(m, victims), new_m]),
+        _manifest_path(path, snap_id),
     )
     _publish(fs, path, {
         "snapshot_id": snap_id,
@@ -248,15 +249,14 @@ def snapshot_read_bucketed(
     Caller must hold the snapshot retained (expire invalidates it)."""
     fs = TableFS(spark, path)
     sid = _resolve(fs, snapshot_id)
-    rec = snapshot_record(path, sid)
+    rec = _read_record(fs, path, sid)
     bucket_cols, n_buckets = rec.get("bucket_cols"), rec.get("n_buckets")
     if not bucket_cols:
         raise ValueError(
             f"snapshot {sid} of {path} carries no bucket spec — "
             "use snapshot_read"
         )
-    m = snapshot_manifest(spark, path, sid)
-    files = sorted(r["file"] for r in m.select("file").distinct().collect())
+    files = manifest_files(_manifest_table(path, rec))
     if not files:
         raise ValueError(f"snapshot {sid} is empty")
     bucket_dir: dict[int, str] = {}

@@ -3,8 +3,9 @@ top of the file-skipping manifest (operators/manifest) — the lakehouse
 mechanics a 100 TB table needs and the flat parquet sinks can't give:
 
 - ``snapshot_commit``: write the batch's files into an immutable
-  per-snapshot directory, build their footer-stats manifest, union it
-  with the parent manifest (append) or replace it (overwrite), and
+  per-snapshot directory, build their footer-stats manifest on the
+  driver, union it with the parent manifest (append) or replace it
+  (overwrite) as one Arrow table, and
   PUBLISH with one atomic rename of the commit record — the commit
   point. A crash before the record leaves orphan files that no reader
   ever sees (GC'd by expire); a crash after is a completed commit.
@@ -53,31 +54,38 @@ look like orphans); its ``orphan_grace_ms`` spares unreferenced files
 younger than the grace — the Delta-VACUUM-retention analog that makes
 GC safe to run beside live writers. Bucketed snapshot commits
 (operators/snapshot_bucketed) keep the documented single-writer
-contract. Concurrent readers are isolated by construction. Manifest
-cost is O(files) footer reads; commit cost is O(batch) + one manifest
-union, never O(table)."""
+contract. Concurrent readers are isolated by construction. Commit
+cost is O(batch) Spark work plus driver-side manifest work: footers of
+the commit's own new files, then the parent manifest read, filtered,
+unioned and written as one pyarrow table (operators/manifest) — no
+Spark job touches a manifest on a commit path, and nothing is
+O(table bytes). The table tip is resolved once per commit: one listing
+of ``snapshots/`` and one read of the tip's record."""
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from replicadb_spark.fs import TableFS, join, pyarrow_fs_for
 from replicadb_spark.operators.manifest import (
-    file_manifest,
+    MANIFEST_DDL,
+    drop_files,
+    list_parquet,
+    manifest_columns,
+    manifest_files,
     prune_files,
     prune_files_not_null,
+    read_footers,
+    read_manifest,
+    stat_intervals,
+    write_manifest,
 )
 
-# n_nulls arrived in round 10; manifests written before then read back
-# with a null n_nulls through this explicit schema — every consumer
-# treats unknown as not-excludable, so old tables stay correct.
-_MANIFEST_SCHEMA = (
-    "file string, n_rows long, column string, "
-    "min_s string, max_s string, n_nulls long"
-)
+_MANIFEST_SCHEMA = MANIFEST_DDL  # the Spark view's schema (legacy name)
 
 
 def _table_fs(path: str, spark: "SparkSession | None" = None) -> TableFS:
@@ -103,6 +111,47 @@ def _snap_ids(fs: TableFS) -> list[int]:
 
 def _manifest_path(path: str, sid: int) -> str:
     return join(path, "manifests", f"m-{sid:06d}")
+
+
+def _read_record(fs: TableFS, path: str, sid: int) -> dict:
+    return json.loads(
+        fs.read_text(join(path, "snapshots", f"s-{sid:06d}.json"))
+    )
+
+
+def _tip(fs: TableFS, path: str) -> "tuple[int | None, dict | None]":
+    """``(tip id, parsed tip record)`` — ``(None, None)`` on an empty
+    table. A commit resolves its parent through this ONCE (one listing
+    of ``snapshots/``, one record read) and hands the parsed record to
+    the schema pin, the bucketed refusal and the manifest location."""
+    ids = _snap_ids(fs)
+    if not ids:
+        return None, None
+    return ids[-1], _read_record(fs, path, ids[-1])
+
+
+def _require_tip(fs: TableFS, path: str) -> "tuple[int, dict]":
+    parent, rec = _tip(fs, path)
+    if parent is None:
+        raise ValueError(f"no snapshots under {fs.root}")
+    return parent, rec
+
+
+def _record_schema(rec: dict):
+    """The table schema a commit record pins (a StructType), or None
+    for commits made before schema tracking."""
+    from pyspark.sql.types import StructType
+
+    s = rec.get("schema")
+    return StructType.fromJson(json.loads(s)) if s else None
+
+
+def _record_manifest(path: str, rec: dict) -> str:
+    """The manifest a commit record points at. OCC writers name
+    manifests with their attempt token (the record is the authoritative
+    pointer); records from before that carry no ``manifest`` key and
+    fall back to the legacy id-derived path."""
+    return rec.get("manifest") or _manifest_path(path, rec["snapshot_id"])
 
 
 def _delete_file_quiet(f: str) -> None:
@@ -207,10 +256,7 @@ def snapshot_schema(path: str, snapshot_id: "int | None" = None):
     StructType), or None for commits made before schema tracking — the
     read path then falls back to parquet inference, exactly the old
     behavior."""
-    from pyspark.sql.types import StructType
-
-    s = snapshot_record(path, snapshot_id).get("schema")
-    return StructType.fromJson(json.loads(s)) if s else None
+    return _record_schema(snapshot_record(path, snapshot_id))
 
 
 # Publish-retry cap for optimistic concurrency: each retry means a
@@ -350,8 +396,7 @@ def snapshot_commit(
         raise ValueError(f"mode {mode!r}: use 'append' or 'overwrite'")
     spark = df.sparkSession
     fs = TableFS(spark, path)
-    ids = _snap_ids(fs)
-    parent = ids[-1] if ids else None
+    parent, prec = _tip(fs, path)
     want = None if expect_parent == 0 else expect_parent
     if expect_parent is not None and parent != want:
         raise ConcurrentCommitError(
@@ -359,11 +404,11 @@ def snapshot_commit(
             f"{expect_parent} but the tip is {parent} — the derived "
             "content is stale; recompute from the new tip or skip"
         )
-    if parent is not None:
-        _refuse_bucketed(path, parent, "snapshot_commit")
+    if prec is not None:
+        _refuse_bucketed(prec, path, "snapshot_commit")
     table_schema = _nullable(df.schema)
-    if parent is not None and mode == "append":
-        prev_schema = snapshot_schema(path, parent)
+    if prec is not None and mode == "append":
+        prev_schema = _record_schema(prec)
         if prev_schema is not None:
             merged, changes = _merge_schemas(prev_schema, table_schema)
             if changes and not evolve:
@@ -377,25 +422,20 @@ def snapshot_commit(
     snap_id = (parent or 0) + 1
     data_dir = join(path, "data", f"snap-{snap_id:06d}-{token}")
     df.write.mode("overwrite").parquet(data_dir)
-
-    has_files = any(
-        f.endswith(".parquet") for f in fs.list_names(data_dir)
-    )
-    if has_files:
-        new_m = file_manifest(spark, data_dir, stat_columns)
-    else:  # empty batch: a legal no-op/overwrite-to-empty commit
-        new_m = spark.createDataFrame([], _MANIFEST_SCHEMA)
+    # an empty batch lists no files: a legal no-op/overwrite-to-empty
+    # commit with an empty manifest
+    new_m = read_footers(list_parquet(data_dir), stat_columns)
     # OCC publish loop: appends always COMPOSE with a concurrent commit
     # (this batch's files are under their own token — re-derive the
     # manifest union against the new tip and retry), modulo the same
     # schema-drift rule re-checked against the new parent's pin.
     for _ in range(_OCC_RETRIES + 1):
         mpath = join(path, "manifests", f"m-{snap_id:06d}-{token}")
-        if mode == "append" and parent is not None:
-            full = snapshot_manifest(spark, path, parent).unionByName(new_m)
+        if mode == "append" and prec is not None:
+            full = pa.concat_tables([_manifest_table(path, prec), new_m])
         else:
             full = new_m
-        full.write.mode("overwrite").parquet(mpath)
+        write_manifest(full, mpath)
         if _try_publish(fs, path, {
             "snapshot_id": snap_id,
             "parent_id": parent,
@@ -407,7 +447,7 @@ def snapshot_commit(
         }):
             return snap_id
         fs.delete(mpath, recursive=True)  # orphaned loser manifest
-        parent = _snap_ids(fs)[-1]
+        parent, prec = _require_tip(fs, path)
         if expect_parent is not None:
             # the lost race IS the tip moving past the precondition —
             # never republish derived content over the winner's commit.
@@ -422,7 +462,7 @@ def snapshot_commit(
             )
         snap_id = parent + 1
         if mode == "append":
-            prev_schema = snapshot_schema(path, parent)
+            prev_schema = _record_schema(prec)
             if prev_schema is not None:
                 merged, changes = _merge_schemas(
                     prev_schema, _nullable(df.schema)
@@ -441,11 +481,12 @@ def snapshot_commit(
     )
 
 
-def _refuse_bucketed(path: str, sid: int, op: str) -> None:
+def _refuse_bucketed(rec: dict, path: str, op: str) -> None:
     """Ops that would emit files without bucket ids (or fragment a
     bucket across dirs) refuse bucketed snapshot tables — their layout
-    invariant is whole-bucket rewrites (operators/snapshot_bucketed)."""
-    if snapshot_record(path, sid).get("n_buckets"):
+    invariant is whole-bucket rewrites (operators/snapshot_bucketed).
+    ``rec`` is the parsed tip record."""
+    if rec.get("n_buckets"):
         raise ValueError(
             f"{op}: {path} is a BUCKETED snapshot table — use the "
             "operators/snapshot_bucketed commit/upsert path (whole-bucket "
@@ -467,19 +508,22 @@ def _resolve(fs: TableFS, snapshot_id: "int | None") -> int:
 
 
 def _manifest_location(fs: TableFS, path: str, sid: int) -> str:
-    """The manifest a snapshot's commit record points at. OCC writers
-    name manifests with their attempt token (commit record is the
-    authoritative pointer); records from before that carry no
-    ``manifest`` key and fall back to the legacy id-derived path."""
-    rec = json.loads(
-        fs.read_text(join(path, "snapshots", f"s-{sid:06d}.json"))
-    )
-    return rec.get("manifest") or _manifest_path(path, sid)
+    """The manifest snapshot ``sid``'s commit record points at."""
+    return _record_manifest(path, _read_record(fs, path, sid))
+
+
+def _manifest_table(path: str, rec: dict) -> pa.Table:
+    """The manifest of a parsed commit record as a driver-side Arrow
+    table — what every commit path reads, filters and unions."""
+    return read_manifest(_record_manifest(path, rec))
 
 
 def snapshot_manifest(
     spark: SparkSession, path: str, snapshot_id: "int | None" = None
 ) -> DataFrame:
+    """A snapshot's manifest as a lazy DataFrame — the public view that
+    metadata aggregates run on. Commit paths read the same bytes as an
+    Arrow table on the driver instead."""
     fs = TableFS(spark, path)
     sid = _resolve(fs, snapshot_id)
     return spark.read.schema(_MANIFEST_SCHEMA).parquet(
@@ -492,8 +536,9 @@ def _cow_publish(
     fs: TableFS,
     path: str,
     parent: int,
+    parent_m: pa.Table,
     victims: "list[str]",
-    new_m: DataFrame,
+    new_m: pa.Table,
     rec: dict,
     *,
     op: str,
@@ -504,9 +549,10 @@ def _cow_publish(
     upsert) with optimistic-concurrency retry — the Delta-style OCC
     loop for the concurrent ingest+maintenance reality:
 
-    - manifest = parent's manifest minus ``victims`` plus ``new_m``,
-      written under this attempt's token so no concurrent writer shares
-      the location; the commit record points at it.
+    - manifest = parent's manifest (``parent_m``, the Arrow table the
+      caller already read) minus ``victims`` plus ``new_m``, written on
+      the driver under this attempt's token so no concurrent writer
+      shares the location; the commit record points at it.
     - on a lost publish race, re-read the new tip and VALIDATE the read
       set: every victim file must still be visible there (a concurrent
       commit that rewrote/removed any of them invalidates this op's
@@ -528,12 +574,13 @@ def _cow_publish(
     - retry with the new parent; cap at ``_OCC_RETRIES`` consecutive
       losses."""
     victims_set = set(victims)
+    m = parent_m
     for _ in range(_OCC_RETRIES + 1):
         snap_id = parent + 1
         mpath = join(path, "manifests", f"m-{snap_id:06d}-{token}")
-        m = snapshot_manifest(spark, path, parent)
-        kept = m.where(~F.col("file").isin(victims)) if victims else m
-        kept.unionByName(new_m).write.mode("overwrite").parquet(mpath)
+        write_manifest(
+            pa.concat_tables([drop_files(m, victims_set), new_m]), mpath
+        )
         if _try_publish(fs, path, {
             **rec,
             "snapshot_id": snap_id,
@@ -542,14 +589,9 @@ def _cow_publish(
         }):
             return snap_id
         fs.delete(mpath, recursive=True)  # orphaned loser manifest
-        new_parent = _snap_ids(fs)[-1]
-        visible = {
-            r["file"]
-            for r in snapshot_manifest(spark, path, new_parent)
-            .select("file")
-            .distinct()
-            .collect()
-        }
+        new_parent, tip_rec = _require_tip(fs, path)
+        m = _manifest_table(path, tip_rec)
+        visible = set(manifest_files(m))
         gone = sorted(victims_set - visible)
         if gone:
             raise ConcurrentCommitError(
@@ -562,7 +604,7 @@ def _cow_publish(
             from pyspark.sql.types import StructType
 
             ours = StructType.fromJson(json.loads(rec["schema"]))
-            theirs = snapshot_schema(path, new_parent)
+            theirs = _record_schema(tip_rec)
             if theirs is not None:
                 # safe iff OUR pin already covers the tip's (equal, or
                 # we are the evolver and ours is a superset/widening of
@@ -631,17 +673,18 @@ def snapshot_read(
     before an additive evolution read back with null in the added
     columns and widened numerics up-cast — pass ``schema`` to override,
     or for empty legacy snapshots with no pinned schema."""
-    sid = _resolve(TableFS(spark, path), snapshot_id)
-    m = snapshot_manifest(spark, path, sid)
+    fs = TableFS(spark, path)
+    rec = _read_record(fs, path, _resolve(fs, snapshot_id))
+    m = _manifest_table(path, rec)
     if prune is not None:
         files = prune_files(m, *prune)
     else:
-        files = sorted(r["file"] for r in m.select("file").distinct().collect())
+        files = manifest_files(m)
     if prune_not_null is not None:
         nn = set(prune_files_not_null(m, prune_not_null))
         files = [f for f in files if f in nn]
     if schema is None:
-        schema = snapshot_schema(path, sid)  # None on legacy commits
+        schema = _record_schema(rec)  # None on legacy commits
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -778,18 +821,17 @@ def snapshot_restore(
     be a human decision). Returns the new snapshot id; a restore to the
     current tip is a no-op returning the tip."""
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_restore")
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_restore")
     target = _resolve(fs, snapshot_id)
     if target == parent:
         return parent
+    trec = _read_record(fs, path, target)
     token = _commit_token()
     snap_id = parent + 1
     mpath = join(path, "manifests", f"m-{snap_id:06d}-{token}")
-    snapshot_manifest(spark, path, target).write.mode("overwrite").parquet(
-        mpath
-    )
-    tschema = snapshot_schema(path, target)
+    write_manifest(_manifest_table(path, trec), mpath)
+    tschema = _record_schema(trec)
     _publish(fs, path, {
         "snapshot_id": snap_id,
         "parent_id": parent,
@@ -892,7 +934,7 @@ def snapshot_expire(
     if snap_dirs:
         dirs_df = spark.createDataFrame([(d,) for d in snap_dirs], "dir string")
 
-        def list_parquet(batches):
+        def list_snap_dirs(batches):
             import pandas as pd
 
             for pdf in batches:
@@ -919,7 +961,7 @@ def snapshot_expire(
 
         on_disk = dirs_df.repartition(
             min(len(snap_dirs), spark.sparkContext.defaultParallelism)
-        ).mapInPandas(list_parquet, "file string")
+        ).mapInPandas(list_snap_dirs, "file string")
         doomed = on_disk.join(referenced, "file", "left_anti")
 
         def delete_batch(batches):
@@ -991,8 +1033,7 @@ def snapshot_expire(
 def snapshot_record(path: str, snapshot_id: "int | None" = None) -> dict:
     """The commit record of a snapshot (current if id is None)."""
     fs = _table_fs(path)
-    sid = _resolve(fs, snapshot_id)
-    return json.loads(fs.read_text(join(path, "snapshots", f"s-{sid:06d}.json")))
+    return _read_record(fs, path, _resolve(fs, snapshot_id))
 
 
 def last_committed_meta(path: str, key: str) -> "int | None":
@@ -1005,7 +1046,7 @@ def last_committed_meta(path: str, key: str) -> "int | None":
     if not fs.exists(join(path, "snapshots")):
         return None
     for sid in reversed(_snap_ids(fs)):
-        b = snapshot_record(path, sid).get(key)
+        b = _read_record(fs, path, sid).get(key)
         if b is not None:
             return int(b)
     return None
@@ -1037,37 +1078,19 @@ def snapshot_delete(
     still reads the pre-delete data (time travel) until expired.
     Returns the new snapshot id."""
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_delete")
-    tschema = snapshot_schema(path, parent)
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_delete")
+    tschema = _record_schema(prec)
     reader = spark.read.schema(tschema) if tschema is not None else spark.read
-    m = snapshot_manifest(spark, path, parent)
-    if prune is not None:
-        victims = prune_files(m, *prune)
-    else:
-        victims = sorted(
-            r["file"] for r in m.select("file").distinct().collect()
-        )
+    m = _manifest_table(path, prec)
+    victims = prune_files(m, *prune) if prune is not None else manifest_files(m)
     token = _commit_token()
     data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-    stat_cols = sorted(
-        r["column"]
-        for r in m.select("column").distinct().collect()
-    ) or None
     if victims:
         survivors = reader.parquet(*victims).where(~condition)
         survivors.write.mode("overwrite").parquet(data_dir)
-        has_files = any(
-            f.endswith(".parquet") for f in fs.list_names(data_dir)
-        )
-        new_m = (
-            file_manifest(spark, data_dir, stat_cols)
-            if has_files
-            else spark.createDataFrame([], _MANIFEST_SCHEMA)
-        )
-    else:
-        new_m = spark.createDataFrame([], _MANIFEST_SCHEMA)
-    return _cow_publish(spark, fs, path, parent, victims, new_m, {
+    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+    return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
         "operation": "delete",
         "new_data_dir": data_dir,
         "victim_files": len(victims),
@@ -1097,12 +1120,12 @@ def snapshot_compact(
     import math
 
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_compact")
-    tschema = snapshot_schema(path, parent)
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_compact")
+    tschema = _record_schema(prec)
     reader = spark.read.schema(tschema) if tschema is not None else spark.read
-    m = snapshot_manifest(spark, path, parent)
-    files = sorted(r["file"] for r in m.select("file").distinct().collect())
+    m = _manifest_table(path, prec)
+    files = manifest_files(m)
     sizes = dict(fs.glob(join(path, "data", "*", "*.parquet")))
     big = 1 << 62
     small = [
@@ -1115,14 +1138,11 @@ def snapshot_compact(
     data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
     nbytes = sum(sizes[f] for f in small)
     n_out = target_files or max(1, math.ceil(nbytes / (128 * 1024 * 1024)))
-    stat_cols = sorted(
-        r["column"] for r in m.select("column").distinct().collect()
-    ) or None
     reader.parquet(*small).coalesce(n_out).write.mode(
         "overwrite"
     ).parquet(data_dir)
-    new_m = file_manifest(spark, data_dir, stat_cols)
-    return _cow_publish(spark, fs, path, parent, small, new_m, {
+    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+    return _cow_publish(spark, fs, path, parent, m, small, new_m, {
         "operation": "compact",
         "new_data_dir": data_dir,
         "compacted_files": len(small),
@@ -1159,11 +1179,11 @@ def snapshot_zorder_compact(
     from replicadb_spark.operators.ordering import zorder_value
 
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_zorder_compact")
-    tschema = snapshot_schema(path, parent)
-    m = snapshot_manifest(spark, path, parent)
-    files = sorted(r["file"] for r in m.select("file").distinct().collect())
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_zorder_compact")
+    tschema = _record_schema(prec)
+    m = _manifest_table(path, prec)
+    files = manifest_files(m)
     if not files:
         return parent
     reader = spark.read.schema(tschema) if tschema is not None else spark.read
@@ -1206,12 +1226,9 @@ def snapshot_zorder_compact(
     token = _commit_token()
     data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
     clustered.write.mode("overwrite").parquet(data_dir)
-    stat_cols = sorted(
-        {r["column"] for r in m.select("column").distinct().collect()}
-        | {col_x, col_y}
-    )
-    new_m = file_manifest(spark, data_dir, stat_cols)
-    return _cow_publish(spark, fs, path, parent, files, new_m, {
+    stat_cols = sorted(set(manifest_columns(m) or ()) | {col_x, col_y})
+    new_m = read_footers(list_parquet(data_dir), stat_cols)
+    return _cow_publish(spark, fs, path, parent, m, files, new_m, {
         "operation": "zorder",
         "new_data_dir": data_dir,
         "zorder_by": [col_x, col_y],
@@ -1232,24 +1249,14 @@ def snapshot_changed_files(
     :func:`snapshot_changes` never reads them. ``from_snapshot=0`` is
     the empty table before the first commit (an initial commit's
     changelog is all inserts)."""
-    a = (
-        set()
-        if from_snapshot == 0
-        else set(
-            r["file"]
-            for r in snapshot_manifest(spark, path, from_snapshot)
-            .select("file")
-            .distinct()
-            .collect()
-        )
-    )
-    b = set(
-        r["file"]
-        for r in snapshot_manifest(spark, path, to_snapshot)
-        .select("file")
-        .distinct()
-        .collect()
-    )
+    fs = TableFS(spark, path)
+
+    def visible(sid: "int | None") -> "set[str]":
+        rec = _read_record(fs, path, _resolve(fs, sid))
+        return set(manifest_files(_manifest_table(path, rec)))
+
+    a = set() if from_snapshot == 0 else visible(from_snapshot)
+    b = visible(to_snapshot)
     return sorted(b - a), sorted(a - b)
 
 
@@ -1380,6 +1387,59 @@ def snapshot_changes(
     )
 
 
+def _staged(
+    staging: DataFrame,
+    pk_columns: "list[str]",
+    order_column: "str | None",
+) -> DataFrame:
+    """A merge-on-key batch, collapsed to its newest row per PK by
+    ``order_column`` and materialized ONCE with
+    ``localCheckpoint(eager=True)``: the victim join, the rewrite and
+    the PK guard then read it without recomputing the batch. The
+    checkpoint runs the plan through AQE, so the collapse's shuffle
+    lands at a data-sized width; a ``persist()`` would instead freeze
+    the ``spark.sql.shuffle.partitions`` width and every later stage —
+    the rewrite's file count included — would inherit it."""
+    if order_column is not None:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(*pk_columns).orderBy(F.col(order_column).desc())
+        staging = (
+            staging.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+    return staging.localCheckpoint(eager=True)
+
+
+def _victims(
+    m: pa.Table, staging: DataFrame, prune_column: "str | None"
+) -> "list[str]":
+    """Files a merge-on-key commit rewrites: every visible file of the
+    Arrow manifest ``m`` when ``prune_column`` is None, else the files
+    whose ``prune_column`` stats contain AT LEAST ONE staging key —
+    per-key interval matching, NOT one global [min, max], which a batch
+    mixing a low-key update with a high-key insert would stretch over
+    the whole table. One broadcast interval join: the manifest's
+    O(files) intervals broadcast into the staging keys. Files without
+    parseable stats are always victims — unknown is never excludable."""
+    if prune_column is None:
+        return manifest_files(m)
+    known, unknown = stat_intervals(m, prune_column)
+    hit: "list[str]" = []
+    if known:
+        iv = staging.sparkSession.createDataFrame(
+            known, "file string, mn double, mx double"
+        )
+        keys = staging.select(F.col(prune_column).cast("double").alias("__k"))
+        k = F.col("__k")
+        joined = keys.join(
+            F.broadcast(iv), (k >= F.col("mn")) & (k <= F.col("mx"))
+        )
+        hit = [r["file"] for r in joined.select("file").distinct().collect()]
+    return sorted(set(hit) | set(unknown))
+
+
 def snapshot_upsert(
     spark: SparkSession,
     path: str,
@@ -1440,167 +1500,107 @@ def snapshot_upsert(
             "old version of an updated key"
         )
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_upsert")
-    tschema = snapshot_schema(path, parent)
-    m = snapshot_manifest(spark, path, parent)
-    staging = staging.persist()
-    try:
-        if order_column is not None:
-            from pyspark.sql import Window
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_upsert")
+    tschema = _record_schema(prec)
+    m = _manifest_table(path, prec)
+    table_files = manifest_files(m)
+    staging_c = _staged(staging, pk_columns, order_column)
+    victims = _victims(m, staging_c, prune_column)
+    token = _commit_token()
+    data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
+    # the TABLE's columns are the merge schema: staging is projected
+    # onto them (after the order_column compaction above), so extra
+    # batch columns can't poison the table's part-file schemas.
+    # The pinned snapshot schema is authoritative (a single file's
+    # footer may predate an additive evolution); legacy tables
+    # without one fall back to a file footer — including under
+    # evolve=True, where ignoring evolution silently would
+    # contradict the documented MERGE-with-evolution contract.
+    if evolve:
+        from pyspark.sql.types import StructType
 
-            w = Window.partitionBy(*pk_columns).orderBy(
-                F.col(order_column).desc()
-            )
-            staging_c = (
-                staging.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            staging_c = staging
-        if prune_column is not None:
-            stats = m.where(F.col("column") == prune_column).select(
-                "file",
-                F.col("min_s").try_cast("double").alias("mn"),
-                F.col("max_s").try_cast("double").alias("mx"),
-            )
-            keys = staging_c.select(
-                F.col(prune_column).cast("double").alias("__k")
-            ).distinct()
-            hit = stats.join(
-                F.broadcast(keys),
-                (F.col("__k") >= F.col("mn")) & (F.col("__k") <= F.col("mx")),
-                "left_semi",
-            ).select("file")
-            # files with no stats row / unparseable stats: keep them —
-            # unknown is never excludable (the prune_files contract)
-            unknown = (
-                m.select("file").distinct()
-                .join(stats.where(
-                    F.col("mn").isNotNull() & F.col("mx").isNotNull()
-                ).select("file"), "file", "left_anti")
-            )
-            victims = sorted(
-                r["file"]
-                for r in hit.unionByName(unknown).distinct().collect()
-            )
-        else:
-            victims = sorted(
-                r["file"] for r in m.select("file").distinct().collect()
-            )
-        token = _commit_token()
-        data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-        # the TABLE's columns are the merge schema: staging is projected
-        # onto them (after the order_column compaction above), so extra
-        # batch columns can't poison the table's part-file schemas.
-        # The pinned snapshot schema is authoritative (a single file's
-        # footer may predate an additive evolution); legacy tables
-        # without one fall back to a file footer — including under
-        # evolve=True, where ignoring evolution silently would
-        # contradict the documented MERGE-with-evolution contract.
-        if evolve:
-            from pyspark.sql.types import StructType
-
-            if tschema is None:
-                table_files = sorted(
-                    r["file"]
-                    for r in m.select("file").distinct().collect()
+        if tschema is None and table_files:
+            tschema = _nullable(spark.read.parquet(table_files[0]).schema)
+        stg_fields = [
+            f for f in _nullable(staging_c.schema).fields
+            if not (
+                order_column is not None
+                and f.name == order_column
+                and (
+                    tschema is None
+                    or order_column not in tschema.fieldNames()
                 )
-                if table_files:
-                    tschema = _nullable(
-                        spark.read.parquet(table_files[0]).schema
-                    )
-            stg_fields = [
-                f for f in _nullable(staging_c.schema).fields
-                if not (
-                    order_column is not None
-                    and f.name == order_column
-                    and (
-                        tschema is None
-                        or order_column not in tschema.fieldNames()
-                    )
-                )
-            ]
-            if tschema is not None:
-                tschema, _changes = _merge_schemas(
-                    tschema, StructType(stg_fields)
-                )
-            else:  # empty legacy table: staging DEFINES the schema
-                tschema = _nullable(StructType(stg_fields))
+            )
+        ]
         if tschema is not None:
-            cols = tschema.fieldNames()
-        else:
-            table_files = sorted(
-                r["file"] for r in m.select("file").distinct().collect()
+            tschema, _changes = _merge_schemas(
+                tschema, StructType(stg_fields)
             )
-            cols = (
-                spark.read.parquet(table_files[0]).columns
-                if table_files
-                else staging_c.columns
+        else:  # empty legacy table: staging DEFINES the schema
+            tschema = _nullable(StructType(stg_fields))
+    if tschema is not None:
+        cols = tschema.fieldNames()
+    else:
+        cols = (
+            spark.read.parquet(table_files[0]).columns
+            if table_files
+            else staging_c.columns
+        )
+    missing = [c for c in cols if c not in staging_c.columns]
+    if missing:
+        raise ValueError(
+            f"staging batch lacks table columns {missing}"
+        )
+    staging_c = staging_c.select(*cols)
+    if tschema is not None:
+        # name match alone is not enough: a staging batch carrying a
+        # WIDENED type under evolve=False would union-coerce into
+        # wide physical files while the record still pins the narrow
+        # schema — every later read of the snapshot then fails
+        # ('Parquet column cannot be converted'). Same-family drift
+        # is cast DOWN to the pin (ANSI mode — Spark 4's default —
+        # makes a lossy cast fail loudly at write time, never a
+        # silently unreadable snapshot); cross-family drift raises
+        # inside _merge_schemas. Under evolve=True the merge above
+        # already widened tschema, so no cast occurs.
+        _, drift = _merge_schemas(tschema, _nullable(staging_c.schema))
+        if drift:
+            staging_c = staging_c.select(
+                *[
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    for f in tschema.fields
+                ]
             )
-        missing = [c for c in cols if c not in staging_c.columns]
-        if missing:
-            raise ValueError(
-                f"staging batch lacks table columns {missing}"
-            )
-        staging_c = staging_c.select(*cols)
-        if tschema is not None:
-            # name match alone is not enough: a staging batch carrying a
-            # WIDENED type under evolve=False would union-coerce into
-            # wide physical files while the record still pins the narrow
-            # schema — every later read of the snapshot then fails
-            # ('Parquet column cannot be converted'). Same-family drift
-            # is cast DOWN to the pin (ANSI mode — Spark 4's default —
-            # makes a lossy cast fail loudly at write time, never a
-            # silently unreadable snapshot); cross-family drift raises
-            # inside _merge_schemas. Under evolve=True the merge above
-            # already widened tschema, so no cast occurs.
-            _, drift = _merge_schemas(tschema, _nullable(staging_c.schema))
-            if drift:
-                staging_c = staging_c.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in tschema.fields
-                    ]
-                )
-        stat_cols = sorted(
-            r["column"] for r in m.select("column").distinct().collect()
-        ) or None
-        if victims:
-            keys = staging_c.select(*pk_columns).distinct()
-            vreader = (
-                spark.read.schema(tschema)
-                if tschema is not None
-                else spark.read
-            )
-            survivors = (
-                vreader.parquet(*victims)
-                .select(*cols)
-                .join(F.broadcast(keys), pk_columns, "left_anti")
-            )
-            merged = survivors.unionByName(staging_c)
-        else:
-            merged = staging_c
-        merged.write.mode("overwrite").parquet(data_dir)
-        new_m = file_manifest(spark, data_dir, stat_cols)
-        orig_files = {
-            r["file"] for r in m.select("file").distinct().collect()
-        }
-        return _cow_publish(spark, fs, path, parent, victims, new_m, {
-            "operation": "upsert",
-            "new_data_dir": data_dir,
-            "victim_files": len(victims),
-            **({"schema": tschema.json()} if tschema is not None else {}),
-            **(meta or {}),
-        }, op="snapshot_upsert", token=token, pk_guard={
-            "pk_columns": list(pk_columns),
-            "keys_df": staging_c.select(*pk_columns).distinct(),
-            "schema": tschema,
-            "orig_files": orig_files,
-        })
-    finally:
-        staging.unpersist()
+    keys = staging_c.select(*pk_columns).distinct()
+    if victims:
+        vreader = (
+            spark.read.schema(tschema)
+            if tschema is not None
+            else spark.read
+        )
+        survivors = (
+            vreader.parquet(*victims)
+            .select(*cols)
+            .join(F.broadcast(keys), pk_columns, "left_anti")
+        )
+        merged = survivors.unionByName(staging_c)
+    else:
+        merged = staging_c
+    merged.write.mode("overwrite").parquet(data_dir)
+    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+    return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
+        "operation": "upsert",
+        "new_data_dir": data_dir,
+        "victim_files": len(victims),
+        **({"schema": tschema.json()} if tschema is not None else {}),
+        **(meta or {}),
+    }, op="snapshot_upsert", token=token, pk_guard={
+        "pk_columns": list(pk_columns),
+        "keys_df": keys,
+        "schema": tschema,
+        "orig_files": set(table_files),
+    })
 
 
 def _merge_insert_fill(
@@ -1802,328 +1802,263 @@ def snapshot_merge(
             "old version of an updated key"
         )
     fs = TableFS(spark, path)
-    parent = _resolve(fs, None)
-    _refuse_bucketed(path, parent, "snapshot_merge")
-    tschema = snapshot_schema(path, parent)
-    m = snapshot_manifest(spark, path, parent)
+    parent, prec = _require_tip(fs, path)
+    _refuse_bucketed(prec, path, "snapshot_merge")
+    tschema = _record_schema(prec)
+    m = _manifest_table(path, prec)
+    table_files = manifest_files(m)
     adds_rows = when_matched == "update" or when_not_matched == "insert"
-    staging = staging.persist()
-    try:
-        if order_column is not None:
-            from pyspark.sql import Window
+    staging_c = _staged(staging, pk_columns, order_column)
+    # the tombstone flag is computed BEFORE the projection below —
+    # delete_when typically references a changelog column (op) that
+    # is not a table column and would not survive the projection
+    if delete_when is not None:
+        staging_c = staging_c.withColumn(
+            "__del", F.coalesce(delete_when, F.lit(False))
+        )
+    if evolve:
+        # widen the pinned schema by the staging batch BEFORE the
+        # column projection (the snapshot_upsert evolve contract):
+        # the order column (when not already a table column) and
+        # the internal tombstone flag stay staging-side details
+        from pyspark.sql.types import StructType
 
-            w = Window.partitionBy(*pk_columns).orderBy(
-                F.col(order_column).desc()
+        if tschema is None and table_files:
+            tschema = _nullable(spark.read.parquet(table_files[0]).schema)
+        stg_fields = [
+            f for f in _nullable(staging_c.schema).fields
+            if f.name != "__del"
+            and f.name not in evolve_exclude
+            # under a column-subset SET, only the listed columns
+            # (plus keys) participate in evolution — other staging
+            # columns are batch baggage, not table data
+            and (
+                update_columns is None
+                or f.name in pk_columns
+                or f.name in update_columns
             )
-            staging_c = (
-                staging.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            staging_c = staging
-        # the tombstone flag is computed BEFORE the projection below —
-        # delete_when typically references a changelog column (op) that
-        # is not a table column and would not survive the projection
-        if delete_when is not None:
-            staging_c = staging_c.withColumn(
-                "__del", F.coalesce(delete_when, F.lit(False))
-            )
-        if evolve:
-            # widen the pinned schema by the staging batch BEFORE the
-            # column projection (the snapshot_upsert evolve contract):
-            # the order column (when not already a table column) and
-            # the internal tombstone flag stay staging-side details
-            from pyspark.sql.types import StructType
-
-            if tschema is None:
-                table_files = sorted(
-                    r["file"]
-                    for r in m.select("file").distinct().collect()
-                )
-                if table_files:
-                    tschema = _nullable(
-                        spark.read.parquet(table_files[0]).schema
-                    )
-            stg_fields = [
-                f for f in _nullable(staging_c.schema).fields
-                if f.name != "__del"
-                and f.name not in evolve_exclude
-                # under a column-subset SET, only the listed columns
-                # (plus keys) participate in evolution — other staging
-                # columns are batch baggage, not table data
+            and not (
+                order_column is not None
+                and f.name == order_column
                 and (
-                    update_columns is None
-                    or f.name in pk_columns
-                    or f.name in update_columns
+                    tschema is None
+                    or order_column not in tschema.fieldNames()
                 )
-                and not (
-                    order_column is not None
-                    and f.name == order_column
-                    and (
-                        tschema is None
-                        or order_column not in tschema.fieldNames()
-                    )
-                )
-            ]
-            if tschema is not None:
-                tschema, _changes = _merge_schemas(
-                    tschema, StructType(stg_fields)
-                )
-            else:  # empty legacy table: staging DEFINES the schema
-                tschema = _nullable(StructType(stg_fields))
+            )
+        ]
         if tschema is not None:
-            cols = tschema.fieldNames()
-            tmap = {f.name: f.dataType for f in tschema.fields}
-        else:
-            table_files = sorted(
-                r["file"] for r in m.select("file").distinct().collect()
+            tschema, _changes = _merge_schemas(
+                tschema, StructType(stg_fields)
             )
-            fsch = (
-                spark.read.parquet(table_files[0]).schema
-                if table_files
-                else _nullable(staging_c.schema)
-            )
-            cols = fsch.fieldNames()
-            tmap = {f.name: f.dataType for f in fsch.fields}
-        if adds_rows and update_columns is not None:
-            from pyspark.sql.types import StructType
+        else:  # empty legacy table: staging DEFINES the schema
+            tschema = _nullable(StructType(stg_fields))
+    if tschema is not None:
+        cols = tschema.fieldNames()
+        tmap = {f.name: f.dataType for f in tschema.fields}
+    else:
+        fsch = (
+            spark.read.parquet(table_files[0]).schema
+            if table_files
+            else _nullable(staging_c.schema)
+        )
+        cols = fsch.fieldNames()
+        tmap = {f.name: f.dataType for f in fsch.fields}
+    if adds_rows and update_columns is not None:
+        from pyspark.sql.types import StructType
 
-            unknown = [c for c in update_columns if c not in cols]
-            if unknown:
-                raise ValueError(
-                    f"update_columns not in the table schema: {unknown} — "
-                    "pass evolve=True to add them"
-                )
-            required = [
-                c for c in cols if c in pk_columns or c in update_columns
-            ]
-            missing = [c for c in required if c not in staging_c.columns]
-            if missing:
-                raise ValueError(
-                    f"staging batch lacks table columns {missing}"
-                )
-            flag = ["__del"] if delete_when is not None else []
-            staging_c = staging_c.select(*required, *flag)
-            if tschema is not None:
-                sub = StructType([f for f in tschema.fields
-                                  if f.name in required])
-                _, drift = _merge_schemas(
-                    sub, _nullable(staging_c.drop("__del").schema)
-                    if flag
-                    else _nullable(staging_c.schema),
-                )
-                if drift:
-                    staging_c = staging_c.select(
-                        *[
-                            F.col(f.name).cast(f.dataType).alias(f.name)
-                            for f in sub.fields
-                        ],
-                        *flag,
-                    )
-        elif adds_rows:
-            missing = [c for c in cols if c not in staging_c.columns]
-            if missing:
-                raise ValueError(
-                    f"staging batch lacks table columns {missing}"
-                )
-            flag = ["__del"] if delete_when is not None else []
-            staging_c = staging_c.select(*cols, *flag)
-            if tschema is not None:
-                # same-family drift casts DOWN to the pin (the
-                # snapshot_upsert strict-mode contract)
-                _, drift = _merge_schemas(
-                    tschema, _nullable(staging_c.drop("__del").schema)
-                    if flag
-                    else _nullable(staging_c.schema),
-                )
-                if drift:
-                    staging_c = staging_c.select(
-                        *[
-                            F.col(f.name).cast(f.dataType).alias(f.name)
-                            for f in tschema.fields
-                        ],
-                        *flag,
-                    )
-        else:
-            missing = [c for c in pk_columns if c not in staging_c.columns]
-            if missing:
-                raise ValueError(f"staging batch lacks pk columns {missing}")
-            staging_c = staging_c.select(*pk_columns)
-        if prune_column is not None:
-            stats = m.where(F.col("column") == prune_column).select(
-                "file",
-                F.col("min_s").try_cast("double").alias("mn"),
-                F.col("max_s").try_cast("double").alias("mx"),
+        unknown = [c for c in update_columns if c not in cols]
+        if unknown:
+            raise ValueError(
+                f"update_columns not in the table schema: {unknown} — "
+                "pass evolve=True to add them"
             )
-            pk = staging_c.select(
-                F.col(prune_column).cast("double").alias("__k")
-            ).distinct()
-            hit = stats.join(
-                F.broadcast(pk),
-                (F.col("__k") >= F.col("mn")) & (F.col("__k") <= F.col("mx")),
-                "left_semi",
-            ).select("file")
-            unknown = (
-                m.select("file").distinct()
-                .join(stats.where(
-                    F.col("mn").isNotNull() & F.col("mx").isNotNull()
-                ).select("file"), "file", "left_anti")
+        required = [
+            c for c in cols if c in pk_columns or c in update_columns
+        ]
+        missing = [c for c in required if c not in staging_c.columns]
+        if missing:
+            raise ValueError(
+                f"staging batch lacks table columns {missing}"
             )
-            victims = sorted(
-                r["file"]
-                for r in hit.unionByName(unknown).distinct().collect()
+        flag = ["__del"] if delete_when is not None else []
+        staging_c = staging_c.select(*required, *flag)
+        if tschema is not None:
+            sub = StructType([f for f in tschema.fields
+                              if f.name in required])
+            _, drift = _merge_schemas(
+                sub, _nullable(staging_c.drop("__del").schema)
+                if flag
+                else _nullable(staging_c.schema),
             )
-        else:
-            victims = sorted(
-                r["file"] for r in m.select("file").distinct().collect()
+            if drift:
+                staging_c = staging_c.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in sub.fields
+                    ],
+                    *flag,
+                )
+    elif adds_rows:
+        missing = [c for c in cols if c not in staging_c.columns]
+        if missing:
+            raise ValueError(
+                f"staging batch lacks table columns {missing}"
             )
-        token = _commit_token()
-        data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-        stat_cols = sorted(
-            r["column"] for r in m.select("column").distinct().collect()
-        ) or None
-        keys = staging_c.select(*pk_columns).distinct()
-        # tombstone rows evict (their keys stay in ``keys``) but never
-        # re-enter: the ADD source drops them here
-        staging_add = (
-            staging_c.where(~F.col("__del")).drop("__del")
-            if delete_when is not None
-            else staging_c
-        )
-        vreader = (
-            spark.read.schema(tschema) if tschema is not None else spark.read
-        )
-        parts: "list[DataFrame]" = []
-        if victims:
-            vrows = vreader.parquet(*victims).select(*cols)
-            if not_matched_by_source == "keep":
-                parts.append(
-                    vrows.join(F.broadcast(keys), pk_columns, "left_anti")
+        flag = ["__del"] if delete_when is not None else []
+        staging_c = staging_c.select(*cols, *flag)
+        if tschema is not None:
+            # same-family drift casts DOWN to the pin (the
+            # snapshot_upsert strict-mode contract)
+            _, drift = _merge_schemas(
+                tschema, _nullable(staging_c.drop("__del").schema)
+                if flag
+                else _nullable(staging_c.schema),
+            )
+            if drift:
+                staging_c = staging_c.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in tschema.fields
+                    ],
+                    *flag,
                 )
-            if when_matched is None:
-                parts.append(
-                    vrows.join(F.broadcast(keys), pk_columns, "left_semi")
-                )
-            if adds_rows:
-                # keys the table actually has — victims hold every
-                # staging key present anywhere, so this is exact
-                matched_keys = (
-                    vrows.select(*pk_columns)
-                    .join(F.broadcast(keys), pk_columns, "left_semi")
-                    .distinct()
-                )
-                if when_matched == "update":
-                    upd_src = staging_add.join(
-                        F.broadcast(matched_keys), pk_columns, "left_semi"
-                    )
-                    if update_columns is None:
-                        parts.append(upd_src)
-                    else:
-                        # column-subset SET: listed columns take the
-                        # staging value (NULLs included — SET is
-                        # verbatim), everything else keeps the victim
-                        # row's current value; the batch broadcasts
-                        # into the victim scan, the corpus side never
-                        # shuffles
-                        non_pk = [c for c in cols if c not in pk_columns]
-                        parts.append(
-                            vrows.alias("v")
-                            .join(
-                                F.broadcast(upd_src.alias("s")),
-                                pk_columns,
-                            )
-                            .select(
-                                *pk_columns,
-                                *[
-                                    (
-                                        F.col(f"s.{c}")
-                                        if c in update_columns
-                                        else F.col(f"v.{c}")
-                                    ).alias(c)
-                                    for c in non_pk
-                                ],
-                            )
-                            .select(*cols)
-                        )
-                if when_not_matched == "insert":
-                    parts.append(
-                        _merge_insert_fill(
-                            staging_add.join(
-                                F.broadcast(matched_keys),
-                                pk_columns,
-                                "left_anti",
-                            ),
-                            cols, pk_columns, update_columns, tmap,
-                        )
-                    )
-        elif when_not_matched == "insert":
+    else:
+        missing = [c for c in pk_columns if c not in staging_c.columns]
+        if missing:
+            raise ValueError(f"staging batch lacks pk columns {missing}")
+        staging_c = staging_c.select(*pk_columns)
+    victims = _victims(m, staging_c, prune_column)
+    token = _commit_token()
+    data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
+    keys = staging_c.select(*pk_columns).distinct()
+    # tombstone rows evict (their keys stay in ``keys``) but never
+    # re-enter: the ADD source drops them here
+    staging_add = (
+        staging_c.where(~F.col("__del")).drop("__del")
+        if delete_when is not None
+        else staging_c
+    )
+    vreader = (
+        spark.read.schema(tschema) if tschema is not None else spark.read
+    )
+    parts: "list[DataFrame]" = []
+    if victims:
+        vrows = vreader.parquet(*victims).select(*cols)
+        if not_matched_by_source == "keep":
             parts.append(
-                _merge_insert_fill(
-                    staging_add, cols, pk_columns, update_columns, tmap
+                vrows.join(F.broadcast(keys), pk_columns, "left_anti")
+            )
+        if when_matched is None:
+            parts.append(
+                vrows.join(F.broadcast(keys), pk_columns, "left_semi")
+            )
+        if adds_rows:
+            # keys the table actually has — victims hold every
+            # staging key present anywhere, so this is exact
+            matched_keys = (
+                vrows.select(*pk_columns)
+                .join(F.broadcast(keys), pk_columns, "left_semi")
+                .distinct()
+            )
+            if when_matched == "update":
+                upd_src = staging_add.join(
+                    F.broadcast(matched_keys), pk_columns, "left_semi"
                 )
+                if update_columns is None:
+                    parts.append(upd_src)
+                else:
+                    # column-subset SET: listed columns take the
+                    # staging value (NULLs included — SET is
+                    # verbatim), everything else keeps the victim
+                    # row's current value; the batch broadcasts
+                    # into the victim scan, the corpus side never
+                    # shuffles
+                    non_pk = [c for c in cols if c not in pk_columns]
+                    parts.append(
+                        vrows.alias("v")
+                        .join(
+                            F.broadcast(upd_src.alias("s")),
+                            pk_columns,
+                        )
+                        .select(
+                            *pk_columns,
+                            *[
+                                (
+                                    F.col(f"s.{c}")
+                                    if c in update_columns
+                                    else F.col(f"v.{c}")
+                                ).alias(c)
+                                for c in non_pk
+                            ],
+                        )
+                        .select(*cols)
+                    )
+            if when_not_matched == "insert":
+                parts.append(
+                    _merge_insert_fill(
+                        staging_add.join(
+                            F.broadcast(matched_keys),
+                            pk_columns,
+                            "left_anti",
+                        ),
+                        cols, pk_columns, update_columns, tmap,
+                    )
+                )
+    elif when_not_matched == "insert":
+        parts.append(
+            _merge_insert_fill(
+                staging_add, cols, pk_columns, update_columns, tmap
             )
-        if not victims and not parts:
-            # nothing pruned in, nothing admitted by any clause (e.g. a
-            # delete-only batch of keys absent from the table): the
-            # post-merge state is byte-identical, so return the current
-            # tip instead of burning a snapshot id + full manifest copy
-            # on an empty rewrite (Delta's no-op MERGE behavior —
-            # replayed empty changelog batches must not inflate the log).
-            # Caller-supplied ``meta`` is DROPPED with the commit
-            # (ADVICE r13): a no-op publishes nothing, so e.g. a CDC
-            # batch_id riding meta is not recorded and
-            # last_committed_batch_id does not advance — replay of a
-            # no-op is idempotent, and audit consumers must read a
-            # missing batch id as "no effect" (documented at the
-            # stream_snapshot_cdc_replica call site too)
-            return parent
-        if parts:
-            merged = parts[0]
-            for p in parts[1:]:
-                merged = merged.unionByName(p)
-        else:
-            merged = spark.createDataFrame(
-                [], tschema if tschema is not None else staging_add.schema
-            )
-        merged.write.mode("overwrite").parquet(data_dir)
-        has_files = any(
-            f.endswith(".parquet") for f in fs.list_names(data_dir)
         )
-        new_m = (
-            file_manifest(spark, data_dir, stat_cols)
-            if has_files
-            else spark.createDataFrame([], _MANIFEST_SCHEMA)
+    if not victims and not parts:
+        # nothing pruned in, nothing admitted by any clause (e.g. a
+        # delete-only batch of keys absent from the table): the
+        # post-merge state is byte-identical, so return the current
+        # tip instead of burning a snapshot id + full manifest copy
+        # on an empty rewrite (Delta's no-op MERGE behavior —
+        # replayed empty changelog batches must not inflate the log).
+        # Caller-supplied ``meta`` is DROPPED with the commit
+        # (ADVICE r13): a no-op publishes nothing, so e.g. a CDC
+        # batch_id riding meta is not recorded and
+        # last_committed_batch_id does not advance — replay of a
+        # no-op is idempotent, and audit consumers must read a
+        # missing batch id as "no effect" (documented at the
+        # stream_snapshot_cdc_replica call site too)
+        return parent
+    if parts:
+        merged = parts[0]
+        for p in parts[1:]:
+            merged = merged.unionByName(p)
+    else:
+        merged = spark.createDataFrame(
+            [], tschema if tschema is not None else staging_add.schema
         )
-        orig_files = {
-            r["file"] for r in m.select("file").distinct().collect()
-        }
-        return _cow_publish(spark, fs, path, parent, victims, new_m, {
-            "operation": "merge",
-            "new_data_dir": data_dir,
-            "victim_files": len(victims),
-            "clauses": {
-                "when_matched": when_matched,
-                "when_not_matched": when_not_matched,
-                "not_matched_by_source": not_matched_by_source,
-                **(
-                    {"delete_when": True}
-                    if delete_when is not None
-                    else {}
-                ),
-                **(
-                    {"update_columns": list(update_columns)}
-                    if update_columns is not None
-                    else {}
-                ),
-            },
-            **({"schema": tschema.json()} if tschema is not None else {}),
-            **(meta or {}),
-        }, op="snapshot_merge", token=token, pk_guard={
-            "pk_columns": list(pk_columns),
-            "keys_df": keys,
-            "schema": tschema,
-            "orig_files": orig_files,
-        })
-    finally:
-        staging.unpersist()
+    merged.write.mode("overwrite").parquet(data_dir)
+    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+    return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
+        "operation": "merge",
+        "new_data_dir": data_dir,
+        "victim_files": len(victims),
+        "clauses": {
+            "when_matched": when_matched,
+            "when_not_matched": when_not_matched,
+            "not_matched_by_source": not_matched_by_source,
+            **(
+                {"delete_when": True}
+                if delete_when is not None
+                else {}
+            ),
+            **(
+                {"update_columns": list(update_columns)}
+                if update_columns is not None
+                else {}
+            ),
+        },
+        **({"schema": tschema.json()} if tschema is not None else {}),
+        **(meta or {}),
+    }, op="snapshot_merge", token=token, pk_guard={
+        "pk_columns": list(pk_columns),
+        "keys_df": keys,
+        "schema": tschema,
+        "orig_files": set(table_files),
+    })

@@ -297,16 +297,23 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     """Manifest n_nulls: exact per-file null counts, rows emitted for
     entirely-null columns (null min/max), IS-NOT-NULL pruning skips
     provably-all-null files and keeps everything unknown — including
-    legacy 5-column manifests read through the widened schema."""
+    legacy 5-column manifests read through the widened schema, and
+    commits on a table whose tip manifest is such a legacy multi-part
+    Spark write."""
+    from replicadb_spark.fs import TableFS
     from replicadb_spark.operators.manifest import (
         file_manifest,
+        list_parquet,
         prune_files,
         prune_files_not_null,
+        read_manifest,
     )
     from replicadb_spark.operators.snapshot_table import (
         _MANIFEST_SCHEMA,
+        _manifest_location,
         snapshot_manifest,
         snapshot_metadata_agg,
+        snapshot_upsert,
     )
 
     path = str(tmp_path / "nn")
@@ -362,3 +369,50 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     # file_manifest over a plain directory agrees with the snapshot view
     fm = file_manifest(spark, path + "/data", ["label"])
     assert fm.where(F.col("n_nulls").isNull()).count() == 0
+
+    # the tip manifest rewritten the pre-n_nulls way: Spark, multi-part,
+    # 5 columns. An append and an upsert must commit on top of it.
+    fs = TableFS(spark, path)
+    tip_m = _manifest_location(fs, path, 2)
+    fs.delete(tip_m, recursive=True)
+    spark.read.parquet(legacy_path).repartition(3).write.parquet(tip_m)
+    assert len(list_parquet(tip_m)) > 1
+    assert "n_nulls" not in spark.read.parquet(tip_m).columns
+    snapshot_commit(
+        spark.createDataFrame([(13, "z")], "id long, label string"),
+        path, stat_columns=["id", "label"],
+    )
+    s4 = snapshot_upsert(
+        spark, path,
+        spark.createDataFrame([(0, "a"), (14, "w")], "id long, label string"),
+        pk_columns=["id"], prune_column="id",
+    )
+    want = {i: None for i in range(10)}
+    want.update({0: "a", 10: "x", 11: None, 12: "y", 13: "z", 14: "w"})
+    got = {r["id"]: r["label"] for r in snapshot_read(spark, path).collect()}
+    assert got == want
+    # the new tip manifest is one driver-written file, read back the same
+    # by the Spark view and the Arrow reader; legacy rows keep their
+    # unknown null counts (never excludable)
+    new_m = _manifest_location(fs, path, s4)
+    assert len(list_parquet(new_m)) == 1
+    view = snapshot_manifest(spark, path)
+    arrow = read_manifest(new_m)
+    key = ("file", "column", "n_rows", "min_s", "max_s", "n_nulls")
+
+    def rows(rs):
+        return sorted(tuple(str(r[k]) for k in key) for r in rs)
+
+    assert rows(view.collect()) == rows(arrow.to_pylist())
+    assert view.where(F.col("n_nulls").isNull()).count() > 0
+    for lo, hi in ((0.0, 5.0), (11.0, 11.0), (13.0, 99.0)):
+        assert prune_files(view, "id", lo, hi) == prune_files(arrow, "id", lo, hi)
+    assert prune_files_not_null(view, "label") == prune_files_not_null(
+        arrow, "label"
+    )
+    kept = prune_files(view, "id", 13.0, 14.0)
+    assert {
+        r["id"] for r in snapshot_read(spark, path, prune=("id", 13.0, 14.0))
+        .where("id >= 13").collect()
+    } == {13, 14}
+    assert len(kept) < len(prune_files(view, "id", 0.0, 99.0))

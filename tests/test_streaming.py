@@ -1812,6 +1812,74 @@ def test_stream_snapshot_replica_converges_time_travels_and_replays(spark, tmp_p
     assert {r["k"]: r["v"] for r in snapshot_read(spark, table).collect()} == want
 
 
+def test_stream_snapshot_replica_upsert_files_track_parallelism(spark, tmp_path):
+    """The upsert's rewrite is sized by the data, not by
+    ``spark.sql.shuffle.partitions``: a change batch of several hundred
+    distinct keys goes through the order-column window (a shuffle at
+    the configured width), yet the files the upsert adds stay within
+    ``defaultParallelism`` plus one per rewritten victim file. A staging
+    frame frozen at the shuffle width would add one file per non-empty
+    shuffle partition."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from replicadb_spark.operators.snapshot_table import (
+        current_snapshot,
+        snapshot_changed_files,
+        snapshot_read,
+    )
+    from replicadb_spark.streaming import pipeline as P
+
+    dp = spark.sparkContext.defaultParallelism
+    width = max(200, 8 * dp)
+    boot = [(k, k, 0) for k in range(600)]
+    # 400 distinct keys: 300 updates (some twice, newest seq wins) and
+    # 100 inserts
+    change = [(k, -k, 1) for k in range(300, 700)]
+    change += [(k, 10 * k, 2) for k in range(300, 700, 7)]
+    src = tmp_path / "wide_src"
+    src.mkdir()
+    for i, rows in enumerate([boot, change]):
+        pq.write_table(
+            pa.table({
+                "k": pa.array([r[0] for r in rows], pa.int64()),
+                "v": pa.array([r[1] for r in rows], pa.int64()),
+                "seq": pa.array([r[2] for r in rows], pa.int64()),
+            }),
+            src / f"f{i}.parquet",
+        )
+        time.sleep(1.05)
+        os.utime(src / f"f{i}.parquet")
+    table = str(tmp_path / "wide_replica")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        stream = (
+            spark.readStream.schema("k long, v long, seq long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = P.stream_snapshot_replica(
+            stream, table, str(tmp_path / "wide_ck"),
+            pk_columns=["k"], prune_column="k", order_column="seq",
+        )
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert current_snapshot(table) == 2
+    want = {k: k for k in range(300)}
+    want.update({r[0]: r[1] for r in change})  # rows ordered by seq
+    got = {r["k"]: r["v"] for r in snapshot_read(spark, table).collect()}
+    assert got == want
+    added, removed = snapshot_changed_files(spark, table, 1, 2)
+    assert removed and len(added) <= dp + len(removed) < width // 2, (
+        len(added), len(removed), dp, width,
+    )
+
+
 def test_stream_snapshot_replica_absorbs_schema_evolution(spark, tmp_path):
     """Twin #26 across a stream RESTART whose source grew a column:
     evolve=True forwards MERGE-with-schema-evolution to the snapshot
