@@ -335,6 +335,7 @@ def pyarrow_fs_for(path: str):
 
 
 def pyarrow_open(path: str):
-    """Open one data file for reading inside an executor task."""
+    """Open one data file for reading, on the driver or in an executor
+    task."""
     fs, p = pyarrow_fs_for(path)
     return fs.open_input_file(p)

@@ -85,8 +85,6 @@ from replicadb_spark.operators.manifest import (
     write_manifest,
 )
 
-_MANIFEST_SCHEMA = MANIFEST_DDL  # the Spark view's schema (legacy name)
-
 
 def _table_fs(path: str, spark: "SparkSession | None" = None) -> TableFS:
     """FS handle for a table root. Metadata-only entry points that take
@@ -131,10 +129,9 @@ def _tip(fs: TableFS, path: str) -> "tuple[int | None, dict | None]":
 
 
 def _require_tip(fs: TableFS, path: str) -> "tuple[int, dict]":
-    parent, rec = _tip(fs, path)
-    if parent is None:
-        raise ValueError(f"no snapshots under {fs.root}")
-    return parent, rec
+    """:func:`_tip` of a table that must have one."""
+    parent = _resolve(fs, None)
+    return parent, _read_record(fs, path, parent)
 
 
 def _record_schema(rec: dict):
@@ -507,11 +504,6 @@ def _resolve(fs: TableFS, snapshot_id: "int | None") -> int:
     return snapshot_id
 
 
-def _manifest_location(fs: TableFS, path: str, sid: int) -> str:
-    """The manifest snapshot ``sid``'s commit record points at."""
-    return _record_manifest(path, _read_record(fs, path, sid))
-
-
 def _manifest_table(path: str, rec: dict) -> pa.Table:
     """The manifest of a parsed commit record as a driver-side Arrow
     table — what every commit path reads, filters and unions."""
@@ -526,8 +518,8 @@ def snapshot_manifest(
     Arrow table on the driver instead."""
     fs = TableFS(spark, path)
     sid = _resolve(fs, snapshot_id)
-    return spark.read.schema(_MANIFEST_SCHEMA).parquet(
-        _manifest_location(fs, path, sid)
+    return spark.read.schema(MANIFEST_DDL).parquet(
+        _record_manifest(path, _read_record(fs, path, sid))
     )
 
 
@@ -875,6 +867,10 @@ def snapshot_expire(
     fs = TableFS(spark, path)
     ids = _snap_ids(fs)
     keep = set(ids[-keep_last:]) if keep_last > 0 else set()
+    kept_m = {
+        sid: _record_manifest(path, _read_record(fs, path, sid))
+        for sid in keep
+    }
     if keep:
         # Manifest rows carry whatever root SPELLING their committer
         # used (/tmp/t vs file:///tmp/t vs file:/tmp/t); the on-disk
@@ -889,8 +885,8 @@ def snapshot_expire(
         # dir this table wrote, not at the root's own substring.
         marker_re = r"/data/snap-\d{6,}(-[0-9a-f]{8})?/"
         stored = (
-            spark.read.schema(_MANIFEST_SCHEMA)
-            .parquet(*[_manifest_location(fs, path, sid) for sid in keep])
+            spark.read.schema(MANIFEST_DDL)
+            .parquet(*kept_m.values())
             .select("file")
             .distinct()
         )
@@ -993,7 +989,7 @@ def snapshot_expire(
     # goes — OCC commits name manifests by attempt token, not id)
     for sid in ids:
         if sid not in keep:
-            doomed_m = _manifest_location(fs, path, sid)
+            doomed_m = _record_manifest(path, _read_record(fs, path, sid))
             fs.delete(join(path, "snapshots", f"s-{sid:06d}.json"))
             fs.delete(doomed_m, recursive=True)
     # manifests referenced by NO live record — crashed OCC losers that
@@ -1005,10 +1001,7 @@ def snapshot_expire(
     # has not landed yet — deleting it would let that publish succeed
     # pointing at a deleted manifest (unreadable tip). Crashed-loser
     # manifests older than the grace still go.
-    live_m = {
-        _manifest_location(fs, path, sid).rstrip("/").rsplit("/", 1)[-1]
-        for sid in keep
-    }
+    live_m = {m.rstrip("/").rsplit("/", 1)[-1] for m in kept_m.values()}
     for name in fs.list_names(join(path, "manifests")):
         if name.startswith("m-") and name not in live_m:
             mdir = join(path, "manifests", name)
@@ -1083,7 +1076,9 @@ def snapshot_delete(
     tschema = _record_schema(prec)
     reader = spark.read.schema(tschema) if tschema is not None else spark.read
     m = _manifest_table(path, prec)
-    victims = prune_files(m, *prune) if prune is not None else manifest_files(m)
+    victims = (
+        prune_files(m, *prune) if prune is not None else manifest_files(m)
+    )
     token = _commit_token()
     data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
     if victims:
@@ -1399,7 +1394,15 @@ def _staged(
     checkpoint runs the plan through AQE, so the collapse's shuffle
     lands at a data-sized width; a ``persist()`` would instead freeze
     the ``spark.sql.shuffle.partitions`` width and every later stage —
-    the rewrite's file count included — would inherit it."""
+    the rewrite's file count included — would inherit it.
+
+    The caller frees the blocks with :func:`_unstage` when its commit
+    returns. Until then they live on the executors that computed them
+    and DIE WITH THEM (the ``graph._lineage_reset`` trade-off): on a
+    cluster, losing an executor mid-commit fails the commit instead of
+    recomputing the batch. A failed commit has published nothing, so
+    re-running the batch (a restarted stream replays it from its
+    checkpoint) is safe."""
     if order_column is not None:
         from pyspark.sql import Window
 
@@ -1410,6 +1413,14 @@ def _staged(
             .drop("__rn")
         )
     return staging.localCheckpoint(eager=True)
+
+
+def _unstage(staged: DataFrame) -> None:
+    """Free a :func:`_staged` frame's checkpoint blocks now, not when JVM
+    GC lets the ContextCleaner (which would let a long streaming session
+    pile up one batch's blocks per commit). Only after the commit
+    returns: no lazy frame over the batch outlives it."""
+    staged._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def _victims(
@@ -1505,102 +1516,105 @@ def snapshot_upsert(
     tschema = _record_schema(prec)
     m = _manifest_table(path, prec)
     table_files = manifest_files(m)
-    staging_c = _staged(staging, pk_columns, order_column)
-    victims = _victims(m, staging_c, prune_column)
-    token = _commit_token()
-    data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-    # the TABLE's columns are the merge schema: staging is projected
-    # onto them (after the order_column compaction above), so extra
-    # batch columns can't poison the table's part-file schemas.
-    # The pinned snapshot schema is authoritative (a single file's
-    # footer may predate an additive evolution); legacy tables
-    # without one fall back to a file footer — including under
-    # evolve=True, where ignoring evolution silently would
-    # contradict the documented MERGE-with-evolution contract.
-    if evolve:
-        from pyspark.sql.types import StructType
+    staging_c = staged = _staged(staging, pk_columns, order_column)
+    try:
+        victims = _victims(m, staging_c, prune_column)
+        token = _commit_token()
+        data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
+        # the TABLE's columns are the merge schema: staging is projected
+        # onto them (after the order_column compaction above), so extra
+        # batch columns can't poison the table's part-file schemas.
+        # The pinned snapshot schema is authoritative (a single file's
+        # footer may predate an additive evolution); legacy tables
+        # without one fall back to a file footer — including under
+        # evolve=True, where ignoring evolution silently would
+        # contradict the documented MERGE-with-evolution contract.
+        if evolve:
+            from pyspark.sql.types import StructType
 
-        if tschema is None and table_files:
-            tschema = _nullable(spark.read.parquet(table_files[0]).schema)
-        stg_fields = [
-            f for f in _nullable(staging_c.schema).fields
-            if not (
-                order_column is not None
-                and f.name == order_column
-                and (
-                    tschema is None
-                    or order_column not in tschema.fieldNames()
+            if tschema is None and table_files:
+                tschema = _nullable(spark.read.parquet(table_files[0]).schema)
+            stg_fields = [
+                f for f in _nullable(staging_c.schema).fields
+                if not (
+                    order_column is not None
+                    and f.name == order_column
+                    and (
+                        tschema is None
+                        or order_column not in tschema.fieldNames()
+                    )
                 )
-            )
-        ]
+            ]
+            if tschema is not None:
+                tschema, _changes = _merge_schemas(
+                    tschema, StructType(stg_fields)
+                )
+            else:  # empty legacy table: staging DEFINES the schema
+                tschema = _nullable(StructType(stg_fields))
         if tschema is not None:
-            tschema, _changes = _merge_schemas(
-                tschema, StructType(stg_fields)
+            cols = tschema.fieldNames()
+        else:
+            cols = (
+                spark.read.parquet(table_files[0]).columns
+                if table_files
+                else staging_c.columns
             )
-        else:  # empty legacy table: staging DEFINES the schema
-            tschema = _nullable(StructType(stg_fields))
-    if tschema is not None:
-        cols = tschema.fieldNames()
-    else:
-        cols = (
-            spark.read.parquet(table_files[0]).columns
-            if table_files
-            else staging_c.columns
-        )
-    missing = [c for c in cols if c not in staging_c.columns]
-    if missing:
-        raise ValueError(
-            f"staging batch lacks table columns {missing}"
-        )
-    staging_c = staging_c.select(*cols)
-    if tschema is not None:
-        # name match alone is not enough: a staging batch carrying a
-        # WIDENED type under evolve=False would union-coerce into
-        # wide physical files while the record still pins the narrow
-        # schema — every later read of the snapshot then fails
-        # ('Parquet column cannot be converted'). Same-family drift
-        # is cast DOWN to the pin (ANSI mode — Spark 4's default —
-        # makes a lossy cast fail loudly at write time, never a
-        # silently unreadable snapshot); cross-family drift raises
-        # inside _merge_schemas. Under evolve=True the merge above
-        # already widened tschema, so no cast occurs.
-        _, drift = _merge_schemas(tschema, _nullable(staging_c.schema))
-        if drift:
-            staging_c = staging_c.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in tschema.fields
-                ]
+        missing = [c for c in cols if c not in staging_c.columns]
+        if missing:
+            raise ValueError(
+                f"staging batch lacks table columns {missing}"
             )
-    keys = staging_c.select(*pk_columns).distinct()
-    if victims:
-        vreader = (
-            spark.read.schema(tschema)
-            if tschema is not None
-            else spark.read
-        )
-        survivors = (
-            vreader.parquet(*victims)
-            .select(*cols)
-            .join(F.broadcast(keys), pk_columns, "left_anti")
-        )
-        merged = survivors.unionByName(staging_c)
-    else:
-        merged = staging_c
-    merged.write.mode("overwrite").parquet(data_dir)
-    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
-    return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
-        "operation": "upsert",
-        "new_data_dir": data_dir,
-        "victim_files": len(victims),
-        **({"schema": tschema.json()} if tschema is not None else {}),
-        **(meta or {}),
-    }, op="snapshot_upsert", token=token, pk_guard={
-        "pk_columns": list(pk_columns),
-        "keys_df": keys,
-        "schema": tschema,
-        "orig_files": set(table_files),
-    })
+        staging_c = staging_c.select(*cols)
+        if tschema is not None:
+            # name match alone is not enough: a staging batch carrying a
+            # WIDENED type under evolve=False would union-coerce into
+            # wide physical files while the record still pins the narrow
+            # schema — every later read of the snapshot then fails
+            # ('Parquet column cannot be converted'). Same-family drift
+            # is cast DOWN to the pin (ANSI mode — Spark 4's default —
+            # makes a lossy cast fail loudly at write time, never a
+            # silently unreadable snapshot); cross-family drift raises
+            # inside _merge_schemas. Under evolve=True the merge above
+            # already widened tschema, so no cast occurs.
+            _, drift = _merge_schemas(tschema, _nullable(staging_c.schema))
+            if drift:
+                staging_c = staging_c.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in tschema.fields
+                    ]
+                )
+        keys = staging_c.select(*pk_columns).distinct()
+        if victims:
+            vreader = (
+                spark.read.schema(tschema)
+                if tschema is not None
+                else spark.read
+            )
+            survivors = (
+                vreader.parquet(*victims)
+                .select(*cols)
+                .join(F.broadcast(keys), pk_columns, "left_anti")
+            )
+            merged = survivors.unionByName(staging_c)
+        else:
+            merged = staging_c
+        merged.write.mode("overwrite").parquet(data_dir)
+        new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+        return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
+            "operation": "upsert",
+            "new_data_dir": data_dir,
+            "victim_files": len(victims),
+            **({"schema": tschema.json()} if tschema is not None else {}),
+            **(meta or {}),
+        }, op="snapshot_upsert", token=token, pk_guard={
+            "pk_columns": list(pk_columns),
+            "keys_df": keys,
+            "schema": tschema,
+            "orig_files": set(table_files),
+        })
+    finally:
+        _unstage(staged)
 
 
 def _merge_insert_fill(
@@ -1808,257 +1822,260 @@ def snapshot_merge(
     m = _manifest_table(path, prec)
     table_files = manifest_files(m)
     adds_rows = when_matched == "update" or when_not_matched == "insert"
-    staging_c = _staged(staging, pk_columns, order_column)
-    # the tombstone flag is computed BEFORE the projection below —
-    # delete_when typically references a changelog column (op) that
-    # is not a table column and would not survive the projection
-    if delete_when is not None:
-        staging_c = staging_c.withColumn(
-            "__del", F.coalesce(delete_when, F.lit(False))
-        )
-    if evolve:
-        # widen the pinned schema by the staging batch BEFORE the
-        # column projection (the snapshot_upsert evolve contract):
-        # the order column (when not already a table column) and
-        # the internal tombstone flag stay staging-side details
-        from pyspark.sql.types import StructType
-
-        if tschema is None and table_files:
-            tschema = _nullable(spark.read.parquet(table_files[0]).schema)
-        stg_fields = [
-            f for f in _nullable(staging_c.schema).fields
-            if f.name != "__del"
-            and f.name not in evolve_exclude
-            # under a column-subset SET, only the listed columns
-            # (plus keys) participate in evolution — other staging
-            # columns are batch baggage, not table data
-            and (
-                update_columns is None
-                or f.name in pk_columns
-                or f.name in update_columns
+    staging_c = staged = _staged(staging, pk_columns, order_column)
+    try:
+        # the tombstone flag is computed BEFORE the projection below —
+        # delete_when typically references a changelog column (op) that
+        # is not a table column and would not survive the projection
+        if delete_when is not None:
+            staging_c = staging_c.withColumn(
+                "__del", F.coalesce(delete_when, F.lit(False))
             )
-            and not (
-                order_column is not None
-                and f.name == order_column
+        if evolve:
+            # widen the pinned schema by the staging batch BEFORE the
+            # column projection (the snapshot_upsert evolve contract):
+            # the order column (when not already a table column) and
+            # the internal tombstone flag stay staging-side details
+            from pyspark.sql.types import StructType
+
+            if tschema is None and table_files:
+                tschema = _nullable(spark.read.parquet(table_files[0]).schema)
+            stg_fields = [
+                f for f in _nullable(staging_c.schema).fields
+                if f.name != "__del"
+                and f.name not in evolve_exclude
+                # under a column-subset SET, only the listed columns
+                # (plus keys) participate in evolution — other staging
+                # columns are batch baggage, not table data
                 and (
-                    tschema is None
-                    or order_column not in tschema.fieldNames()
+                    update_columns is None
+                    or f.name in pk_columns
+                    or f.name in update_columns
                 )
-            )
-        ]
+                and not (
+                    order_column is not None
+                    and f.name == order_column
+                    and (
+                        tschema is None
+                        or order_column not in tschema.fieldNames()
+                    )
+                )
+            ]
+            if tschema is not None:
+                tschema, _changes = _merge_schemas(
+                    tschema, StructType(stg_fields)
+                )
+            else:  # empty legacy table: staging DEFINES the schema
+                tschema = _nullable(StructType(stg_fields))
         if tschema is not None:
-            tschema, _changes = _merge_schemas(
-                tschema, StructType(stg_fields)
+            cols = tschema.fieldNames()
+            tmap = {f.name: f.dataType for f in tschema.fields}
+        else:
+            fsch = (
+                spark.read.parquet(table_files[0]).schema
+                if table_files
+                else _nullable(staging_c.schema)
             )
-        else:  # empty legacy table: staging DEFINES the schema
-            tschema = _nullable(StructType(stg_fields))
-    if tschema is not None:
-        cols = tschema.fieldNames()
-        tmap = {f.name: f.dataType for f in tschema.fields}
-    else:
-        fsch = (
-            spark.read.parquet(table_files[0]).schema
-            if table_files
-            else _nullable(staging_c.schema)
-        )
-        cols = fsch.fieldNames()
-        tmap = {f.name: f.dataType for f in fsch.fields}
-    if adds_rows and update_columns is not None:
-        from pyspark.sql.types import StructType
+            cols = fsch.fieldNames()
+            tmap = {f.name: f.dataType for f in fsch.fields}
+        if adds_rows and update_columns is not None:
+            from pyspark.sql.types import StructType
 
-        unknown = [c for c in update_columns if c not in cols]
-        if unknown:
-            raise ValueError(
-                f"update_columns not in the table schema: {unknown} — "
-                "pass evolve=True to add them"
-            )
-        required = [
-            c for c in cols if c in pk_columns or c in update_columns
-        ]
-        missing = [c for c in required if c not in staging_c.columns]
-        if missing:
-            raise ValueError(
-                f"staging batch lacks table columns {missing}"
-            )
-        flag = ["__del"] if delete_when is not None else []
-        staging_c = staging_c.select(*required, *flag)
-        if tschema is not None:
-            sub = StructType([f for f in tschema.fields
-                              if f.name in required])
-            _, drift = _merge_schemas(
-                sub, _nullable(staging_c.drop("__del").schema)
-                if flag
-                else _nullable(staging_c.schema),
-            )
-            if drift:
-                staging_c = staging_c.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in sub.fields
-                    ],
-                    *flag,
+            unknown = [c for c in update_columns if c not in cols]
+            if unknown:
+                raise ValueError(
+                    f"update_columns not in the table schema: {unknown} — "
+                    "pass evolve=True to add them"
                 )
-    elif adds_rows:
-        missing = [c for c in cols if c not in staging_c.columns]
-        if missing:
-            raise ValueError(
-                f"staging batch lacks table columns {missing}"
-            )
-        flag = ["__del"] if delete_when is not None else []
-        staging_c = staging_c.select(*cols, *flag)
-        if tschema is not None:
-            # same-family drift casts DOWN to the pin (the
-            # snapshot_upsert strict-mode contract)
-            _, drift = _merge_schemas(
-                tschema, _nullable(staging_c.drop("__del").schema)
-                if flag
-                else _nullable(staging_c.schema),
-            )
-            if drift:
-                staging_c = staging_c.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in tschema.fields
-                    ],
-                    *flag,
+            required = [
+                c for c in cols if c in pk_columns or c in update_columns
+            ]
+            missing = [c for c in required if c not in staging_c.columns]
+            if missing:
+                raise ValueError(
+                    f"staging batch lacks table columns {missing}"
                 )
-    else:
-        missing = [c for c in pk_columns if c not in staging_c.columns]
-        if missing:
-            raise ValueError(f"staging batch lacks pk columns {missing}")
-        staging_c = staging_c.select(*pk_columns)
-    victims = _victims(m, staging_c, prune_column)
-    token = _commit_token()
-    data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-    keys = staging_c.select(*pk_columns).distinct()
-    # tombstone rows evict (their keys stay in ``keys``) but never
-    # re-enter: the ADD source drops them here
-    staging_add = (
-        staging_c.where(~F.col("__del")).drop("__del")
-        if delete_when is not None
-        else staging_c
-    )
-    vreader = (
-        spark.read.schema(tschema) if tschema is not None else spark.read
-    )
-    parts: "list[DataFrame]" = []
-    if victims:
-        vrows = vreader.parquet(*victims).select(*cols)
-        if not_matched_by_source == "keep":
-            parts.append(
-                vrows.join(F.broadcast(keys), pk_columns, "left_anti")
-            )
-        if when_matched is None:
-            parts.append(
-                vrows.join(F.broadcast(keys), pk_columns, "left_semi")
-            )
-        if adds_rows:
-            # keys the table actually has — victims hold every
-            # staging key present anywhere, so this is exact
-            matched_keys = (
-                vrows.select(*pk_columns)
-                .join(F.broadcast(keys), pk_columns, "left_semi")
-                .distinct()
-            )
-            if when_matched == "update":
-                upd_src = staging_add.join(
-                    F.broadcast(matched_keys), pk_columns, "left_semi"
+            flag = ["__del"] if delete_when is not None else []
+            staging_c = staging_c.select(*required, *flag)
+            if tschema is not None:
+                sub = StructType([f for f in tschema.fields
+                                  if f.name in required])
+                _, drift = _merge_schemas(
+                    sub, _nullable(staging_c.drop("__del").schema)
+                    if flag
+                    else _nullable(staging_c.schema),
                 )
-                if update_columns is None:
-                    parts.append(upd_src)
-                else:
-                    # column-subset SET: listed columns take the
-                    # staging value (NULLs included — SET is
-                    # verbatim), everything else keeps the victim
-                    # row's current value; the batch broadcasts
-                    # into the victim scan, the corpus side never
-                    # shuffles
-                    non_pk = [c for c in cols if c not in pk_columns]
-                    parts.append(
-                        vrows.alias("v")
-                        .join(
-                            F.broadcast(upd_src.alias("s")),
-                            pk_columns,
-                        )
-                        .select(
-                            *pk_columns,
-                            *[
-                                (
-                                    F.col(f"s.{c}")
-                                    if c in update_columns
-                                    else F.col(f"v.{c}")
-                                ).alias(c)
-                                for c in non_pk
-                            ],
-                        )
-                        .select(*cols)
+                if drift:
+                    staging_c = staging_c.select(
+                        *[
+                            F.col(f.name).cast(f.dataType).alias(f.name)
+                            for f in sub.fields
+                        ],
+                        *flag,
                     )
-            if when_not_matched == "insert":
+        elif adds_rows:
+            missing = [c for c in cols if c not in staging_c.columns]
+            if missing:
+                raise ValueError(
+                    f"staging batch lacks table columns {missing}"
+                )
+            flag = ["__del"] if delete_when is not None else []
+            staging_c = staging_c.select(*cols, *flag)
+            if tschema is not None:
+                # same-family drift casts DOWN to the pin (the
+                # snapshot_upsert strict-mode contract)
+                _, drift = _merge_schemas(
+                    tschema, _nullable(staging_c.drop("__del").schema)
+                    if flag
+                    else _nullable(staging_c.schema),
+                )
+                if drift:
+                    staging_c = staging_c.select(
+                        *[
+                            F.col(f.name).cast(f.dataType).alias(f.name)
+                            for f in tschema.fields
+                        ],
+                        *flag,
+                    )
+        else:
+            missing = [c for c in pk_columns if c not in staging_c.columns]
+            if missing:
+                raise ValueError(f"staging batch lacks pk columns {missing}")
+            staging_c = staging_c.select(*pk_columns)
+        victims = _victims(m, staging_c, prune_column)
+        token = _commit_token()
+        data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
+        keys = staging_c.select(*pk_columns).distinct()
+        # tombstone rows evict (their keys stay in ``keys``) but never
+        # re-enter: the ADD source drops them here
+        staging_add = (
+            staging_c.where(~F.col("__del")).drop("__del")
+            if delete_when is not None
+            else staging_c
+        )
+        vreader = (
+            spark.read.schema(tschema) if tschema is not None else spark.read
+        )
+        parts: "list[DataFrame]" = []
+        if victims:
+            vrows = vreader.parquet(*victims).select(*cols)
+            if not_matched_by_source == "keep":
                 parts.append(
-                    _merge_insert_fill(
-                        staging_add.join(
-                            F.broadcast(matched_keys),
-                            pk_columns,
-                            "left_anti",
-                        ),
-                        cols, pk_columns, update_columns, tmap,
-                    )
+                    vrows.join(F.broadcast(keys), pk_columns, "left_anti")
                 )
-    elif when_not_matched == "insert":
-        parts.append(
-            _merge_insert_fill(
-                staging_add, cols, pk_columns, update_columns, tmap
+            if when_matched is None:
+                parts.append(
+                    vrows.join(F.broadcast(keys), pk_columns, "left_semi")
+                )
+            if adds_rows:
+                # keys the table actually has — victims hold every
+                # staging key present anywhere, so this is exact
+                matched_keys = (
+                    vrows.select(*pk_columns)
+                    .join(F.broadcast(keys), pk_columns, "left_semi")
+                    .distinct()
+                )
+                if when_matched == "update":
+                    upd_src = staging_add.join(
+                        F.broadcast(matched_keys), pk_columns, "left_semi"
+                    )
+                    if update_columns is None:
+                        parts.append(upd_src)
+                    else:
+                        # column-subset SET: listed columns take the
+                        # staging value (NULLs included — SET is
+                        # verbatim), everything else keeps the victim
+                        # row's current value; the batch broadcasts
+                        # into the victim scan, the corpus side never
+                        # shuffles
+                        non_pk = [c for c in cols if c not in pk_columns]
+                        parts.append(
+                            vrows.alias("v")
+                            .join(
+                                F.broadcast(upd_src.alias("s")),
+                                pk_columns,
+                            )
+                            .select(
+                                *pk_columns,
+                                *[
+                                    (
+                                        F.col(f"s.{c}")
+                                        if c in update_columns
+                                        else F.col(f"v.{c}")
+                                    ).alias(c)
+                                    for c in non_pk
+                                ],
+                            )
+                            .select(*cols)
+                        )
+                if when_not_matched == "insert":
+                    parts.append(
+                        _merge_insert_fill(
+                            staging_add.join(
+                                F.broadcast(matched_keys),
+                                pk_columns,
+                                "left_anti",
+                            ),
+                            cols, pk_columns, update_columns, tmap,
+                        )
+                    )
+        elif when_not_matched == "insert":
+            parts.append(
+                _merge_insert_fill(
+                    staging_add, cols, pk_columns, update_columns, tmap
+                )
             )
-        )
-    if not victims and not parts:
-        # nothing pruned in, nothing admitted by any clause (e.g. a
-        # delete-only batch of keys absent from the table): the
-        # post-merge state is byte-identical, so return the current
-        # tip instead of burning a snapshot id + full manifest copy
-        # on an empty rewrite (Delta's no-op MERGE behavior —
-        # replayed empty changelog batches must not inflate the log).
-        # Caller-supplied ``meta`` is DROPPED with the commit
-        # (ADVICE r13): a no-op publishes nothing, so e.g. a CDC
-        # batch_id riding meta is not recorded and
-        # last_committed_batch_id does not advance — replay of a
-        # no-op is idempotent, and audit consumers must read a
-        # missing batch id as "no effect" (documented at the
-        # stream_snapshot_cdc_replica call site too)
-        return parent
-    if parts:
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p)
-    else:
-        merged = spark.createDataFrame(
-            [], tschema if tschema is not None else staging_add.schema
-        )
-    merged.write.mode("overwrite").parquet(data_dir)
-    new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
-    return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
-        "operation": "merge",
-        "new_data_dir": data_dir,
-        "victim_files": len(victims),
-        "clauses": {
-            "when_matched": when_matched,
-            "when_not_matched": when_not_matched,
-            "not_matched_by_source": not_matched_by_source,
-            **(
-                {"delete_when": True}
-                if delete_when is not None
-                else {}
-            ),
-            **(
-                {"update_columns": list(update_columns)}
-                if update_columns is not None
-                else {}
-            ),
-        },
-        **({"schema": tschema.json()} if tschema is not None else {}),
-        **(meta or {}),
-    }, op="snapshot_merge", token=token, pk_guard={
-        "pk_columns": list(pk_columns),
-        "keys_df": keys,
-        "schema": tschema,
-        "orig_files": set(table_files),
-    })
+        if not victims and not parts:
+            # nothing pruned in, nothing admitted by any clause (e.g. a
+            # delete-only batch of keys absent from the table): the
+            # post-merge state is byte-identical, so return the current
+            # tip instead of burning a snapshot id + full manifest copy
+            # on an empty rewrite (Delta's no-op MERGE behavior —
+            # replayed empty changelog batches must not inflate the log).
+            # Caller-supplied ``meta`` is DROPPED with the commit
+            # (ADVICE r13): a no-op publishes nothing, so e.g. a CDC
+            # batch_id riding meta is not recorded and
+            # last_committed_batch_id does not advance — replay of a
+            # no-op is idempotent, and audit consumers must read a
+            # missing batch id as "no effect" (documented at the
+            # stream_snapshot_cdc_replica call site too)
+            return parent
+        if parts:
+            merged = parts[0]
+            for p in parts[1:]:
+                merged = merged.unionByName(p)
+        else:
+            merged = spark.createDataFrame(
+                [], tschema if tschema is not None else staging_add.schema
+            )
+        merged.write.mode("overwrite").parquet(data_dir)
+        new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
+        return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
+            "operation": "merge",
+            "new_data_dir": data_dir,
+            "victim_files": len(victims),
+            "clauses": {
+                "when_matched": when_matched,
+                "when_not_matched": when_not_matched,
+                "not_matched_by_source": not_matched_by_source,
+                **(
+                    {"delete_when": True}
+                    if delete_when is not None
+                    else {}
+                ),
+                **(
+                    {"update_columns": list(update_columns)}
+                    if update_columns is not None
+                    else {}
+                ),
+            },
+            **({"schema": tschema.json()} if tschema is not None else {}),
+            **(meta or {}),
+        }, op="snapshot_merge", token=token, pk_guard={
+            "pk_columns": list(pk_columns),
+            "keys_df": keys,
+            "schema": tschema,
+            "orig_files": set(table_files),
+        })
+    finally:
+        _unstage(staged)

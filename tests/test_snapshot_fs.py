@@ -305,7 +305,9 @@ def test_expire_refuses_manifest_under_foreign_root(spark, tmp_path):
     # corrupt the kept manifest: rewrite its file paths under an alien
     # root (location resolved from the commit record — OCC commits name
     # manifests by attempt token)
-    mpath = snap_mod._manifest_location(TableFS(spark, path), path, 1)
+    mpath = snap_mod._record_manifest(
+        path, snap_mod._read_record(TableFS(spark, path), path, 1)
+    )
     rewritten = (
         spark.read.parquet(mpath)
         .withColumn(

@@ -90,6 +90,113 @@ def test_crash_orphans_invisible_and_expire_gc(spark, tmp_path):
     assert not os.path.isdir(zombie)
 
 
+def test_missing_tip_manifest_raises(spark, tmp_path):
+    """A record whose manifest is gone (an expire that raced a writer
+    deleted it in flight) is an unreadable tip, never an empty table:
+    reading an empty manifest would let the next commit publish one
+    without the table's data, which a later expire would then delete."""
+    from replicadb_spark.fs import TableFS
+    from replicadb_spark.operators.snapshot_table import (
+        _read_record,
+        _record_manifest,
+        snapshot_upsert,
+    )
+
+    path = str(tmp_path / "tbl")
+    snapshot_commit(_batch(spark, 0, 10), path, stat_columns=["id"])
+    tip = snapshot_commit(_batch(spark, 10, 20), path, stat_columns=["id"])
+    fs = TableFS(spark, path)
+    fs.delete(_record_manifest(path, _read_record(fs, path, tip)), recursive=True)
+    with pytest.raises(FileNotFoundError, match="manifest"):
+        snapshot_read(spark, path)
+    with pytest.raises(FileNotFoundError, match="manifest"):
+        snapshot_commit(_batch(spark, 20, 30), path, mode="append")
+    with pytest.raises(FileNotFoundError, match="manifest"):
+        snapshot_upsert(
+            spark, path, _batch(spark, 0, 5), pk_columns=["id"],
+            prune_column="id",
+        )
+    assert current_snapshot(path) == tip  # nothing was published
+    assert snapshot_read(spark, path, snapshot_id=1).count() == 10
+
+
+def test_manifest_listing_skips_hidden_names_keeps_underscore_partitions(
+    spark, tmp_path, monkeypatch,
+):
+    """``list_parquet`` follows Spark's hidden-name rule: ``.`` names and
+    ``_`` names without ``=`` are skipped, an ``_dt=…`` partition
+    directory is data. Threaded footer reads (the remote-filesystem
+    path) give the same rows, in the same order, as sequential ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from replicadb_spark.operators import manifest as mf
+
+    root = tmp_path / "d"
+    data = {
+        "part-0.parquet": [1, 2],
+        "_dt=2024-01-01/part-0.parquet": [3],
+        "k=1/_dt=2024-01-02/part-0.parquet": [4, 5],
+        "_temporary/0/part-0.parquet": [98],
+        ".hidden/part-0.parquet": [99],
+        "._x.parquet": [99],
+    }
+    for rel, ids in data.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"id": ids}), str(root / rel))
+    (root / "_SUCCESS").write_bytes(b"")
+    want = sorted(
+        f"{root}/{r}" for r in
+        ("part-0.parquet", "_dt=2024-01-01/part-0.parquet",
+         "k=1/_dt=2024-01-02/part-0.parquet")
+    )
+    assert mf.list_parquet(str(root)) == want
+    fm = mf.file_manifest(spark, str(root), ["id"])
+    assert sorted(r["file"] for r in fm.collect()) == want
+
+    seq = mf.read_footers(want, ["id"])
+    assert dict(zip(seq.column("file").to_pylist(),
+                    seq.column("max_s").to_pylist())) == {
+        want[0]: "3", want[1]: "5", want[2]: "2",
+    }
+    assert mf._footer_threads(want) == 1  # local files: sequential
+    monkeypatch.setattr(mf, "_footer_threads", lambda files: 3)
+    assert mf.read_footers(want, ["id"]).equals(seq)
+
+
+def test_merge_on_key_commits_release_their_staging_checkpoint(
+    spark, tmp_path,
+):
+    """The upsert's and merge's checkpointed staging batch is freed when
+    the commit returns — a long stream must not keep one batch's blocks
+    per commit until JVM GC gets to them."""
+    from replicadb_spark.operators.snapshot_table import (
+        snapshot_merge,
+        snapshot_upsert,
+    )
+
+    def persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    path = str(tmp_path / "tbl")
+    snapshot_commit(_batch(spark, 0, 20), path, stat_columns=["id"])
+    batch = spark.createDataFrame(
+        [(1, 7, 1), (1, 8, 2), (30, 9, 1)], "id long, v long, seq long"
+    )
+    before = persisted()
+    snapshot_upsert(
+        spark, path, batch, pk_columns=["id"], prune_column="id",
+        order_column="seq",
+    )
+    snapshot_merge(
+        spark, path, batch, pk_columns=["id"], prune_column="id",
+        order_column="seq",
+    )
+    assert persisted() <= before
+    got = {r["id"]: r["v"] for r in snapshot_read(spark, path).collect()}
+    assert (got[1], got[30], len(got)) == (8, 9, 21)
+
+
 def test_empty_commit_is_legal(spark, tmp_path):
     path = str(tmp_path / "tbl")
     snapshot_commit(_batch(spark, 0, 10), path)
@@ -302,6 +409,7 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     Spark write."""
     from replicadb_spark.fs import TableFS
     from replicadb_spark.operators.manifest import (
+        MANIFEST_DDL,
         file_manifest,
         list_parquet,
         prune_files,
@@ -309,8 +417,8 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
         read_manifest,
     )
     from replicadb_spark.operators.snapshot_table import (
-        _MANIFEST_SCHEMA,
-        _manifest_location,
+        _read_record,
+        _record_manifest,
         snapshot_manifest,
         snapshot_metadata_agg,
         snapshot_upsert,
@@ -363,8 +471,14 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     legacy = m.select("file", "n_rows", "column", "min_s", "max_s")
     legacy_path = str(tmp_path / "legacy_m")
     legacy.write.parquet(legacy_path)
-    m_old = spark.read.schema(_MANIFEST_SCHEMA).parquet(legacy_path)
+    m_old = spark.read.schema(MANIFEST_DDL).parquet(legacy_path)
     assert set(prune_files_not_null(m_old, "label")) == set(files)  # keep all
+    # ... and so does the raw 5-column frame, which has no n_nulls at all
+    raw_old = spark.read.parquet(legacy_path)
+    assert set(prune_files_not_null(raw_old, "label")) == set(files)
+    assert prune_files(raw_old, "id", 0.0, 99.0) == prune_files(
+        m_old, "id", 0.0, 99.0
+    )
 
     # file_manifest over a plain directory agrees with the snapshot view
     fm = file_manifest(spark, path + "/data", ["label"])
@@ -373,7 +487,11 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     # the tip manifest rewritten the pre-n_nulls way: Spark, multi-part,
     # 5 columns. An append and an upsert must commit on top of it.
     fs = TableFS(spark, path)
-    tip_m = _manifest_location(fs, path, 2)
+
+    def manifest_of(sid):
+        return _record_manifest(path, _read_record(fs, path, sid))
+
+    tip_m = manifest_of(2)
     fs.delete(tip_m, recursive=True)
     spark.read.parquet(legacy_path).repartition(3).write.parquet(tip_m)
     assert len(list_parquet(tip_m)) > 1
@@ -394,7 +512,7 @@ def test_null_count_stats_and_is_not_null_pruning(spark, tmp_path):
     # the new tip manifest is one driver-written file, read back the same
     # by the Spark view and the Arrow reader; legacy rows keep their
     # unknown null counts (never excludable)
-    new_m = _manifest_location(fs, path, s4)
+    new_m = manifest_of(s4)
     assert len(list_parquet(new_m)) == 1
     view = snapshot_manifest(spark, path)
     arrow = read_manifest(new_m)
