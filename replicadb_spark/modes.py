@@ -56,6 +56,24 @@ def upsert_dataframe(
     )
 
 
+def latest_per_key(
+    df: DataFrame, pk_columns: list[str], order_column: str | None
+) -> DataFrame:
+    """The newest row per PK by ``order_column`` (desc) — the one
+    collapse every merge-on-key batch runs before it merges (a streaming
+    micro-batch or changelog may carry several rows per key). ``df`` is
+    returned unchanged when ``order_column`` is None. Ties on
+    (key, order) keep an arbitrary row."""
+    if order_column is None:
+        return df
+    w = Window.partitionBy(*pk_columns).orderBy(F.col(order_column).desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 # --- JDBC-side mode orchestration ------------------------------------------
 
 def _jvm_connection(spark: SparkSession, url: str, user: str | None, password: str | None):
@@ -232,59 +250,27 @@ def run_file_mode(spark: SparkSession, job: ReplicaJob, df: DataFrame, *,
     strictly stronger than the reference's temp-file merge K11/K12);
     incremental = read-existing → upsert → rewrite.
     """
-    from replicadb_spark.sinks.files import write_file
+    from replicadb_spark.sinks.files import swap_dir, write_file
+    from replicadb_spark.sources.files import read_or_none
 
     if job.mode in ("complete", "complete-atomic"):
         write_file(df, path, fmt, mode="overwrite", **write_opts)
         return
-    # incremental
-    try:
-        existing = spark.read.format(fmt).load(path) if fmt != "csv" else None
-    except Exception as e:
-        # only a genuinely absent sink means "first run" (→ plain
-        # append). An unreadable/corrupt sink must FAIL the job: falling
-        # back to append would silently skip the PK merge and land
-        # duplicate keys (same contract as the streaming state readers).
-        from pyspark.errors import AnalysisException
-
-        cls = e.getErrorClass() if isinstance(e, AnalysisException) and hasattr(
-            e, "getErrorClass"
-        ) else None
-        if cls != "PATH_NOT_FOUND" and "Path does not exist" not in str(e):
-            raise
-        existing = None
-    if existing is None:
-        write_file(df, path, fmt, mode="append", **write_opts)
-        return
-    if not pk_columns:
+    # incremental: only a genuinely absent sink means "first run" (→ plain
+    # append); an unreadable/corrupt sink fails the job inside
+    # read_or_none instead of silently skipping the PK merge
+    existing = read_or_none(spark, path, fmt) if fmt != "csv" else None
+    if existing is None or not pk_columns:
         write_file(df, path, fmt, mode="append", **write_opts)
         return
     # Crash-safe merge: the merged plan READS `path`, so writing back to
     # `path` directly races the overwrite against lazy/recomputed reads
     # (cache eviction mid-write would recompute from the half-overwritten
     # input → data loss). Instead the merge is fully materialized at a
-    # sibling temp path first, then swapped in via rename-aside (the
-    # same dance as sinks.files.compact_files): (1) path → .old (both
-    # copies intact), (2) tmp → path (new data live), (3) delete .old.
-    # A crash at ANY point leaves at least one complete copy on disk
-    # under a discoverable name — never a half-deleted table. Hadoop
-    # FileSystem rename is atomic on HDFS/local; on object stores (s3a)
-    # it degrades to copy+delete, which still never corrupts the source
-    # because the temp write completed before the original is touched.
+    # sibling temp path first, then swapped in by sinks.files.swap_dir's
+    # rename-aside, which leaves at least one complete copy on disk under
+    # a discoverable name at any crash point.
     merged = upsert_dataframe(existing, df, pk_columns)
     tmp = path.rstrip("/") + ".__replicadb_tmp__"
     write_file(merged, tmp, fmt, mode="overwrite", **write_opts)
-    jvm = spark._sc._jvm  # noqa: SLF001
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__replicadb_old__")
-    fs = dst.getFileSystem(spark._sc._jsc.hadoopConfiguration())  # noqa: SLF001
-    fs.delete(old, True)  # stale leftover from a prior crash
-    if not fs.rename(dst, old):
-        raise IOError(f"rename {path} aside failed; merged data is intact at {tmp}")
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"rename {tmp} -> {path} failed; original is intact at {old}, "
-            f"merged data at {tmp}"
-        )
-    fs.delete(old, True)
+    swap_dir(spark, path, tmp, path.rstrip("/") + ".__replicadb_old__")

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from replicadb_spark.modes import latest_per_key
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -175,7 +177,7 @@ def apply_changelog(
     delete drops the key; insert/update UPSERTS the payload (an update
     whose key is absent from the snapshot inserts — MERGE semantics, so
     a delete followed by a later update resurrects the key). Ties on
-    (key, order) are a data error (row_number breaks them
+    (key, order) are a data error (the collapse breaks them
     arbitrarily); real logs have unique sequence numbers.
 
     Scale: one window shuffle on the key over the LOG (compaction —
@@ -184,12 +186,7 @@ def apply_changelog(
     windowed."""
     keys = list(keys)
     payload = [c for c in log.columns if c not in (*keys, op_col, order_col)]
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    last = (
-        log.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", order_col)
-    )
+    last = latest_per_key(log, keys, order_col).drop(order_col)
     survivors = snapshot.select(*keys, *payload).join(
         last.select(*keys), on=keys, how="left_anti"
     )

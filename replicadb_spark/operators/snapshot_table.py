@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from replicadb_spark.fs import TableFS, join, pyarrow_fs_for
+from replicadb_spark.modes import latest_per_key
 from replicadb_spark.operators.manifest import (
     MANIFEST_DDL,
     drop_files,
@@ -553,7 +554,8 @@ def _cow_publish(
       otherwise be silently un-pinned). A concurrent pure APPEND passes
       both checks and serializes as happening after this op — its new
       files flow into the retried manifest untouched.
-    - ``pk_guard`` (merge-on-key committers, i.e. snapshot_upsert):
+    - ``pk_guard`` (merge-on-key committers, i.e. snapshot_merge and
+      its default clause set snapshot_upsert):
       ``{"pk_columns", "keys_df", "schema", "orig_files"}``. A
       concurrent commit that ADDED files since this op's original
       parent passes the two checks above, but if those files carry any
@@ -1403,16 +1405,9 @@ def _staged(
     recomputing the batch. A failed commit has published nothing, so
     re-running the batch (a restarted stream replays it from its
     checkpoint) is safe."""
-    if order_column is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*pk_columns).orderBy(F.col(order_column).desc())
-        staging = (
-            staging.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    return staging.localCheckpoint(eager=True)
+    return latest_per_key(staging, pk_columns, order_column).localCheckpoint(
+        eager=True
+    )
 
 
 def _unstage(staged: DataFrame) -> None:
@@ -1465,7 +1460,9 @@ def snapshot_upsert(
     """PK upsert (the reference's incremental MERGE, M3 —
     SqlManager.java:503-512) as ONE copy-on-write commit on the
     snapshot table — the third merge-capable sink after the live-JDBC
-    MERGE and the bucketed-table surgery:
+    MERGE and the bucketed-table surgery. It is :func:`snapshot_merge`'s
+    default clause set ``("update", "insert", "keep")`` with full rows,
+    whose plan is:
 
     1. victim files = those whose ``prune_column`` stats contain AT
        LEAST ONE staging key (per-key interval matching against the
@@ -1484,7 +1481,7 @@ def snapshot_upsert(
        (extra staging columns — e.g. the order column itself — are
        dropped; the upsert_bucketed_table contract);
     4. manifest = parent minus victims plus new files; one atomic
-       commit-record publish.
+       commit-record publish, recorded as ``"operation": "upsert"``.
 
     Replay-idempotent by construction (same staging rows → same final
     table state), so stream_snapshot_replica needs no extra guard for
@@ -1499,122 +1496,13 @@ def snapshot_upsert(
     if not itself a table column, stays a staging-side implementation
     detail and is never evolved in. Staging still must carry every
     PRE-EXISTING table column."""
-    if not pk_columns:
-        raise ValueError("snapshot upsert requires pk columns")
-    if prune_column is not None and prune_column not in pk_columns:
-        # pruning on a MUTABLE column is unsound: an update that moves
-        # the value out of the batch's range would miss the key's old
-        # row's file and leave a duplicate PK behind
-        raise ValueError(
-            f"prune_column {prune_column!r} must be one of pk_columns "
-            f"{pk_columns} — pruning on a mutable column can miss the "
-            "old version of an updated key"
-        )
-    fs = TableFS(spark, path)
-    parent, prec = _require_tip(fs, path)
-    _refuse_bucketed(prec, path, "snapshot_upsert")
-    tschema = _record_schema(prec)
-    m = _manifest_table(path, prec)
-    table_files = manifest_files(m)
-    staging_c = staged = _staged(staging, pk_columns, order_column)
-    try:
-        victims = _victims(m, staging_c, prune_column)
-        token = _commit_token()
-        data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
-        # the TABLE's columns are the merge schema: staging is projected
-        # onto them (after the order_column compaction above), so extra
-        # batch columns can't poison the table's part-file schemas.
-        # The pinned snapshot schema is authoritative (a single file's
-        # footer may predate an additive evolution); legacy tables
-        # without one fall back to a file footer — including under
-        # evolve=True, where ignoring evolution silently would
-        # contradict the documented MERGE-with-evolution contract.
-        if evolve:
-            from pyspark.sql.types import StructType
-
-            if tschema is None and table_files:
-                tschema = _nullable(spark.read.parquet(table_files[0]).schema)
-            stg_fields = [
-                f for f in _nullable(staging_c.schema).fields
-                if not (
-                    order_column is not None
-                    and f.name == order_column
-                    and (
-                        tschema is None
-                        or order_column not in tschema.fieldNames()
-                    )
-                )
-            ]
-            if tschema is not None:
-                tschema, _changes = _merge_schemas(
-                    tschema, StructType(stg_fields)
-                )
-            else:  # empty legacy table: staging DEFINES the schema
-                tschema = _nullable(StructType(stg_fields))
-        if tschema is not None:
-            cols = tschema.fieldNames()
-        else:
-            cols = (
-                spark.read.parquet(table_files[0]).columns
-                if table_files
-                else staging_c.columns
-            )
-        missing = [c for c in cols if c not in staging_c.columns]
-        if missing:
-            raise ValueError(
-                f"staging batch lacks table columns {missing}"
-            )
-        staging_c = staging_c.select(*cols)
-        if tschema is not None:
-            # name match alone is not enough: a staging batch carrying a
-            # WIDENED type under evolve=False would union-coerce into
-            # wide physical files while the record still pins the narrow
-            # schema — every later read of the snapshot then fails
-            # ('Parquet column cannot be converted'). Same-family drift
-            # is cast DOWN to the pin (ANSI mode — Spark 4's default —
-            # makes a lossy cast fail loudly at write time, never a
-            # silently unreadable snapshot); cross-family drift raises
-            # inside _merge_schemas. Under evolve=True the merge above
-            # already widened tschema, so no cast occurs.
-            _, drift = _merge_schemas(tschema, _nullable(staging_c.schema))
-            if drift:
-                staging_c = staging_c.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in tschema.fields
-                    ]
-                )
-        keys = staging_c.select(*pk_columns).distinct()
-        if victims:
-            vreader = (
-                spark.read.schema(tschema)
-                if tschema is not None
-                else spark.read
-            )
-            survivors = (
-                vreader.parquet(*victims)
-                .select(*cols)
-                .join(F.broadcast(keys), pk_columns, "left_anti")
-            )
-            merged = survivors.unionByName(staging_c)
-        else:
-            merged = staging_c
-        merged.write.mode("overwrite").parquet(data_dir)
-        new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
-        return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
-            "operation": "upsert",
-            "new_data_dir": data_dir,
-            "victim_files": len(victims),
-            **({"schema": tschema.json()} if tschema is not None else {}),
-            **(meta or {}),
-        }, op="snapshot_upsert", token=token, pk_guard={
-            "pk_columns": list(pk_columns),
-            "keys_df": keys,
-            "schema": tschema,
-            "orig_files": set(table_files),
-        })
-    finally:
-        _unstage(staged)
+    return snapshot_merge(
+        spark, path, staging, pk_columns=pk_columns,
+        when_matched="update", when_not_matched="insert",
+        not_matched_by_source="keep",
+        prune_column=prune_column, order_column=order_column, meta=meta,
+        evolve=evolve,
+    )
 
 
 def _merge_insert_fill(
@@ -1658,9 +1546,12 @@ def snapshot_merge(
     update_columns: "list[str] | None" = None,
 ) -> int:
     """Full MERGE semantics as ONE copy-on-write commit — the ANSI /
-    Delta-MERGE generalization of :func:`snapshot_upsert` (which is
-    exactly the ``("update", "insert", "keep")`` combination and
-    handles that case verbatim, pruning included):
+    Delta-MERGE generalization of :func:`snapshot_upsert`, and the one
+    merge-on-key body of the snapshot table: the default clause set
+    ``("update", "insert", "keep")`` with full rows and no
+    ``delete_when`` IS the upsert (same plan, recorded as
+    ``"operation": "upsert"``; every other set records ``"merge"`` plus
+    its ``clauses``):
 
     - ``when_matched``: what happens to keys present in BOTH table and
       staging — ``"update"`` (staging row replaces), ``"delete"``
@@ -1687,17 +1578,22 @@ def snapshot_merge(
     lakehouse surface over the same staging-batch shape. Clause
     combinations that can never touch a row raise.
 
-    Mechanics mirror snapshot_upsert: victims = files that may contain
-    a staging key (per-key interval pruning) or all files under the
-    by-source clause; rows are re-partitioned among KEPT (victim rows
-    whose clause preserves them) and ADDED (staging rows whose clause
-    admits them — matched-key membership decided against the victim
-    rows, which by construction hold every staging key the table has);
-    manifest = parent minus victims plus the rewrite; publish is the
-    OCC loop with the pk_guard (a concurrent commit adding rows with
-    this batch's keys refuses rather than serializing wrongly).
-    Staging must carry every table column when rows can be ADDED; a
-    delete-only merge needs only ``pk_columns``.
+    Mechanics: the batch collapses to its newest row per PK by
+    ``order_column`` and is conformed ONCE — projected onto the table
+    columns (the pk + ``update_columns`` subset under a column-subset
+    SET; the pk columns alone for a delete-only merge) and same-family
+    drift cast DOWN to the pinned schema. Victims = files that may
+    contain a staging key (per-key interval pruning) or all files
+    under the by-source clause. Rows are re-partitioned among KEPT
+    (victim rows whose clause preserves them) and ADDED (staging rows
+    whose clause admits them — matched-key membership decided against
+    the victim rows, which by construction hold every staging key the
+    table has; a full-row update + insert adds the whole batch and
+    needs no such split). Manifest = parent minus victims plus the
+    rewrite; publish is the OCC loop with the pk_guard (a concurrent
+    commit adding rows with this batch's keys refuses rather than
+    serializing wrongly). Staging must carry every table column when
+    rows can be ADDED; a delete-only merge needs only ``pk_columns``.
 
     ``evolve=True`` is MERGE WITH SCHEMA EVOLUTION (the
     snapshot_upsert contract, r13: VERDICT r12 item 3): staging
@@ -1746,6 +1642,12 @@ def snapshot_merge(
     and a manifest copy on a byte-identical state would make replayed
     empty changelog batches inflate the commit log. Returns the new
     (or, for a no-op, current) snapshot id."""
+    from pyspark.sql.types import StructType
+
+    upsert = delete_when is None and update_columns is None and (
+        when_matched, when_not_matched, not_matched_by_source,
+    ) == ("update", "insert", "keep")
+    op = "snapshot_upsert" if upsert else "snapshot_merge"
     valid_m = (None, "update", "delete")
     if when_matched not in valid_m:
         raise ValueError(f"when_matched {when_matched!r}: use {valid_m}")
@@ -1765,7 +1667,7 @@ def snapshot_merge(
     ):
         raise ValueError("merge with no active clause is a no-op")
     if not pk_columns:
-        raise ValueError("snapshot merge requires pk columns")
+        raise ValueError(f"{op} requires pk columns")
     if delete_when is not None and when_matched != "update":
         raise ValueError(
             "delete_when requires when_matched='update' — under "
@@ -1796,20 +1698,15 @@ def snapshot_merge(
                 f"primary key columns cannot be updated: {in_pk} — a "
                 "key change is a delete+insert, not an update"
             )
-    if delete_when is None and update_columns is None and (
-        when_matched, when_not_matched, not_matched_by_source,
-    ) == ("update", "insert", "keep"):
-        return snapshot_upsert(
-            spark, path, staging, pk_columns=pk_columns,
-            prune_column=prune_column, order_column=order_column, meta=meta,
-            evolve=evolve,
-        )
     if not_matched_by_source == "delete" and prune_column is not None:
         raise ValueError(
             "not_matched_by_source='delete' must examine every file — "
             "prune_column cannot be combined with it"
         )
     if prune_column is not None and prune_column not in pk_columns:
+        # pruning on a MUTABLE column is unsound: an update that moves
+        # the value out of the batch's range would miss the key's old
+        # row's file and leave a duplicate PK behind
         raise ValueError(
             f"prune_column {prune_column!r} must be one of pk_columns "
             f"{pk_columns} — pruning on a mutable column can miss the "
@@ -1817,33 +1714,27 @@ def snapshot_merge(
         )
     fs = TableFS(spark, path)
     parent, prec = _require_tip(fs, path)
-    _refuse_bucketed(prec, path, "snapshot_merge")
+    _refuse_bucketed(prec, path, op)
     tschema = _record_schema(prec)
     m = _manifest_table(path, prec)
     table_files = manifest_files(m)
     adds_rows = when_matched == "update" or when_not_matched == "insert"
     staging_c = staged = _staged(staging, pk_columns, order_column)
     try:
-        # the tombstone flag is computed BEFORE the projection below —
-        # delete_when typically references a changelog column (op) that
-        # is not a table column and would not survive the projection
-        if delete_when is not None:
-            staging_c = staging_c.withColumn(
-                "__del", F.coalesce(delete_when, F.lit(False))
-            )
+        # the pinned snapshot schema is authoritative (a single file's
+        # footer may predate an additive evolution); legacy tables
+        # without one fall back to a file footer — including under
+        # evolve=True, where ignoring evolution silently would
+        # contradict the documented MERGE-with-evolution contract
         if evolve:
-            # widen the pinned schema by the staging batch BEFORE the
-            # column projection (the snapshot_upsert evolve contract):
+            # widen the pin by the staging batch BEFORE the projection:
             # the order column (when not already a table column) and
-            # the internal tombstone flag stay staging-side details
-            from pyspark.sql.types import StructType
-
+            # the evolve_exclude columns stay staging-side details
             if tschema is None and table_files:
                 tschema = _nullable(spark.read.parquet(table_files[0]).schema)
             stg_fields = [
                 f for f in _nullable(staging_c.schema).fields
-                if f.name != "__del"
-                and f.name not in evolve_exclude
+                if f.name not in evolve_exclude
                 # under a column-subset SET, only the listed columns
                 # (plus keys) participate in evolution — other staging
                 # columns are batch baggage, not table data
@@ -1867,81 +1758,70 @@ def snapshot_merge(
                 )
             else:  # empty legacy table: staging DEFINES the schema
                 tschema = _nullable(StructType(stg_fields))
-        if tschema is not None:
-            cols = tschema.fieldNames()
-            tmap = {f.name: f.dataType for f in tschema.fields}
-        else:
+        fsch = tschema
+        if fsch is None:
             fsch = (
                 spark.read.parquet(table_files[0]).schema
                 if table_files
                 else _nullable(staging_c.schema)
             )
-            cols = fsch.fieldNames()
-            tmap = {f.name: f.dataType for f in fsch.fields}
-        if adds_rows and update_columns is not None:
-            from pyspark.sql.types import StructType
-
+        cols = fsch.fieldNames()
+        tmap = {f.name: f.dataType for f in fsch.fields}
+        # the one staging conform step: project onto the TABLE's columns
+        # (the pk + update_columns subset under a column-subset SET, the
+        # pk columns alone when no row can be added), so extra batch
+        # columns can't poison the table's part-file schemas
+        if update_columns is not None:
             unknown = [c for c in update_columns if c not in cols]
             if unknown:
                 raise ValueError(
                     f"update_columns not in the table schema: {unknown} — "
                     "pass evolve=True to add them"
                 )
-            required = [
-                c for c in cols if c in pk_columns or c in update_columns
+        if adds_rows:
+            target = [
+                c for c in cols
+                if update_columns is None
+                or c in pk_columns
+                or c in update_columns
             ]
-            missing = [c for c in required if c not in staging_c.columns]
-            if missing:
-                raise ValueError(
-                    f"staging batch lacks table columns {missing}"
-                )
-            flag = ["__del"] if delete_when is not None else []
-            staging_c = staging_c.select(*required, *flag)
-            if tschema is not None:
-                sub = StructType([f for f in tschema.fields
-                                  if f.name in required])
-                _, drift = _merge_schemas(
-                    sub, _nullable(staging_c.drop("__del").schema)
-                    if flag
-                    else _nullable(staging_c.schema),
-                )
-                if drift:
-                    staging_c = staging_c.select(
-                        *[
-                            F.col(f.name).cast(f.dataType).alias(f.name)
-                            for f in sub.fields
-                        ],
-                        *flag,
-                    )
-        elif adds_rows:
-            missing = [c for c in cols if c not in staging_c.columns]
-            if missing:
-                raise ValueError(
-                    f"staging batch lacks table columns {missing}"
-                )
-            flag = ["__del"] if delete_when is not None else []
-            staging_c = staging_c.select(*cols, *flag)
-            if tschema is not None:
-                # same-family drift casts DOWN to the pin (the
-                # snapshot_upsert strict-mode contract)
-                _, drift = _merge_schemas(
-                    tschema, _nullable(staging_c.drop("__del").schema)
-                    if flag
-                    else _nullable(staging_c.schema),
-                )
-                if drift:
-                    staging_c = staging_c.select(
-                        *[
-                            F.col(f.name).cast(f.dataType).alias(f.name)
-                            for f in tschema.fields
-                        ],
-                        *flag,
-                    )
         else:
-            missing = [c for c in pk_columns if c not in staging_c.columns]
-            if missing:
-                raise ValueError(f"staging batch lacks pk columns {missing}")
-            staging_c = staging_c.select(*pk_columns)
+            target = list(pk_columns)
+        missing = [c for c in target if c not in staging_c.columns]
+        if missing:
+            kind = "table" if adds_rows else "pk"
+            raise ValueError(f"staging batch lacks {kind} columns {missing}")
+        flag = []
+        if delete_when is not None:
+            # the tombstone flag is computed BEFORE the projection —
+            # delete_when typically references a changelog column (op)
+            # that is not a table column and would not survive it
+            staging_c = staging_c.withColumn(
+                "__del", F.coalesce(delete_when, F.lit(False))
+            )
+            flag = ["__del"]
+        proj = [F.col(c) for c in target]
+        if adds_rows and tschema is not None:
+            # name match alone is not enough: a staging batch carrying a
+            # WIDENED type under evolve=False would union-coerce into
+            # wide physical files while the record still pins the narrow
+            # schema — every later read of the snapshot then fails
+            # ('Parquet column cannot be converted'). Same-family drift
+            # is cast DOWN to the pin (ANSI mode — Spark 4's default —
+            # makes a lossy cast fail loudly at write time, never a
+            # silently unreadable snapshot); cross-family drift raises
+            # inside _merge_schemas. Under evolve=True the merge above
+            # already widened tschema, so no cast occurs.
+            pin = StructType([f for f in tschema.fields if f.name in target])
+            _, drift = _merge_schemas(
+                pin, _nullable(staging_c.select(*target).schema)
+            )
+            if drift:
+                proj = [
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    for f in pin.fields
+                ]
+        staging_c = staging_c.select(*proj, *flag)
         victims = _victims(m, staging_c, prune_column)
         token = _commit_token()
         data_dir = join(path, "data", f"snap-{parent + 1:06d}-{token}")
@@ -1967,64 +1847,70 @@ def snapshot_merge(
                 parts.append(
                     vrows.join(F.broadcast(keys), pk_columns, "left_semi")
                 )
-            if adds_rows:
-                # keys the table actually has — victims hold every
-                # staging key present anywhere, so this is exact
-                matched_keys = (
-                    vrows.select(*pk_columns)
-                    .join(F.broadcast(keys), pk_columns, "left_semi")
-                    .distinct()
-                )
-                if when_matched == "update":
-                    upd_src = staging_add.join(
-                        F.broadcast(matched_keys), pk_columns, "left_semi"
+        if (
+            when_matched == "update"
+            and when_not_matched == "insert"
+            and update_columns is None
+        ):
+            # full-row update + insert: the matched and the unmatched
+            # staging rows together are the whole batch, so it is added
+            # as is — no matched-key split (the upsert plan)
+            parts.append(staging_add)
+        elif not victims:
+            # no file holds any staging key: every staging row is
+            # not-matched
+            if when_not_matched == "insert":
+                parts.append(
+                    _merge_insert_fill(
+                        staging_add, cols, pk_columns, update_columns, tmap
                     )
-                    if update_columns is None:
-                        parts.append(upd_src)
-                    else:
-                        # column-subset SET: listed columns take the
-                        # staging value (NULLs included — SET is
-                        # verbatim), everything else keeps the victim
-                        # row's current value; the batch broadcasts
-                        # into the victim scan, the corpus side never
-                        # shuffles
-                        non_pk = [c for c in cols if c not in pk_columns]
-                        parts.append(
-                            vrows.alias("v")
-                            .join(
-                                F.broadcast(upd_src.alias("s")),
-                                pk_columns,
-                            )
-                            .select(
-                                *pk_columns,
-                                *[
-                                    (
-                                        F.col(f"s.{c}")
-                                        if c in update_columns
-                                        else F.col(f"v.{c}")
-                                    ).alias(c)
-                                    for c in non_pk
-                                ],
-                            )
-                            .select(*cols)
-                        )
-                if when_not_matched == "insert":
-                    parts.append(
-                        _merge_insert_fill(
-                            staging_add.join(
-                                F.broadcast(matched_keys),
-                                pk_columns,
-                                "left_anti",
-                            ),
-                            cols, pk_columns, update_columns, tmap,
-                        )
-                    )
-        elif when_not_matched == "insert":
-            parts.append(
-                _merge_insert_fill(
-                    staging_add, cols, pk_columns, update_columns, tmap
                 )
+        elif adds_rows:
+            # keys the table actually has — victims hold every staging
+            # key present anywhere, so this is exact
+            matched_keys = (
+                vrows.select(*pk_columns)
+                .join(F.broadcast(keys), pk_columns, "left_semi")
+                .distinct()
             )
+            if when_matched == "update":
+                upd_src = staging_add.join(
+                    F.broadcast(matched_keys), pk_columns, "left_semi"
+                )
+                if update_columns is None:
+                    parts.append(upd_src)
+                else:
+                    # column-subset SET: listed columns take the staging
+                    # value (NULLs included — SET is verbatim),
+                    # everything else keeps the victim row's current
+                    # value; the batch broadcasts into the victim scan,
+                    # the corpus side never shuffles
+                    non_pk = [c for c in cols if c not in pk_columns]
+                    parts.append(
+                        vrows.alias("v")
+                        .join(F.broadcast(upd_src.alias("s")), pk_columns)
+                        .select(
+                            *pk_columns,
+                            *[
+                                (
+                                    F.col(f"s.{c}")
+                                    if c in update_columns
+                                    else F.col(f"v.{c}")
+                                ).alias(c)
+                                for c in non_pk
+                            ],
+                        )
+                        .select(*cols)
+                    )
+            if when_not_matched == "insert":
+                parts.append(
+                    _merge_insert_fill(
+                        staging_add.join(
+                            F.broadcast(matched_keys), pk_columns, "left_anti"
+                        ),
+                        cols, pk_columns, update_columns, tmap,
+                    )
+                )
         if not victims and not parts:
             # nothing pruned in, nothing admitted by any clause (e.g. a
             # delete-only batch of keys absent from the table): the
@@ -2050,28 +1936,28 @@ def snapshot_merge(
             )
         merged.write.mode("overwrite").parquet(data_dir)
         new_m = read_footers(list_parquet(data_dir), manifest_columns(m))
-        return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
-            "operation": "merge",
+        rec = {
+            "operation": "upsert" if upsert else "merge",
             "new_data_dir": data_dir,
             "victim_files": len(victims),
-            "clauses": {
+        }
+        if not upsert:
+            rec["clauses"] = {
                 "when_matched": when_matched,
                 "when_not_matched": when_not_matched,
                 "not_matched_by_source": not_matched_by_source,
-                **(
-                    {"delete_when": True}
-                    if delete_when is not None
-                    else {}
-                ),
+                **({"delete_when": True} if delete_when is not None else {}),
                 **(
                     {"update_columns": list(update_columns)}
                     if update_columns is not None
                     else {}
                 ),
-            },
-            **({"schema": tschema.json()} if tschema is not None else {}),
-            **(meta or {}),
-        }, op="snapshot_merge", token=token, pk_guard={
+            }
+        if tschema is not None:
+            rec["schema"] = tschema.json()
+        return _cow_publish(spark, fs, path, parent, m, victims, new_m, {
+            **rec, **(meta or {}),
+        }, op=op, token=token, pk_guard={
             "pk_columns": list(pk_columns),
             "keys_df": keys,
             "schema": tschema,

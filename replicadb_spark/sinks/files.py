@@ -91,10 +91,9 @@ def compact_files(
     The 100 TB operational problem this solves: streaming/incremental
     sinks accrete thousands of KB-scale files per partition, and every
     downstream scan then pays a task per file. Compaction = read (one
-    splittable scan) → repartition to ceil(bytes/target) → atomic swap
-    via a temp directory — the same crash-safe rename dance as
-    modes.run_file_mode's incremental path (never overwrite the
-    directory a live plan reads from).
+    splittable scan) → repartition to ceil(bytes/target) → write to a
+    temp directory → :func:`swap_dir` (never overwrite the directory a
+    live plan reads from).
     """
     import math
     import uuid
@@ -116,18 +115,43 @@ def compact_files(
     if compression:
         writer = writer.option("compression", compression)
     getattr(writer, fmt)(tmp)
-    # Swap only after the full write committed, via rename-aside so no
-    # crash point loses data: (1) src → src.old (table briefly absent
-    # but both copies intact), (2) tmp → src (table live on new files),
-    # (3) delete src.old. A crash between 1 and 2 leaves both dirs
-    # recoverable; delete-then-rename would instead leave the table
-    # path absent with the data stranded in a hidden tmp dir. All moves
-    # go through the Hadoop FS, so any Spark-readable URI works.
     old = join(parent, f".{name}.old-{uuid.uuid4().hex[:8]}")
-    fs.rename_no_overwrite(path, old)
-    fs.rename_no_overwrite(tmp, path)
-    fs.delete(old, recursive=True)
+    swap_dir(spark, path, tmp, old)
     return n_files
+
+
+def swap_dir(spark, path: str, tmp: str, old: str) -> None:
+    """Replace the directory ``path`` with the fully written ``tmp`` by
+    rename-aside, so no crash point loses data: (1) path → ``old``
+    (table briefly absent, both copies intact), (2) tmp → path (table
+    live on the new files), (3) delete ``old``. A crash between 1 and 2
+    leaves both directories recoverable; delete-then-rename would
+    instead leave the path absent with the data stranded in ``tmp``. A
+    failed rename raises with where the intact data sits. A stale
+    ``old`` left by an earlier crash is removed first. All moves go
+    through the Hadoop FS, so any Spark-readable URI works: rename is
+    atomic on HDFS/local; on object stores it degrades to copy+delete,
+    which still never corrupts the source because ``tmp`` was complete
+    before ``path`` is touched. The incremental file mode and
+    :func:`compact_files` both swap through here."""
+    from replicadb_spark.fs import TableFS
+
+    fs = TableFS(spark, path)
+    fs.delete(old, recursive=True)
+    try:
+        fs.rename_no_overwrite(path, old)
+    except IOError as e:
+        raise IOError(
+            f"rename {path} aside failed; new data is intact at {tmp}"
+        ) from e
+    try:
+        fs.rename_no_overwrite(tmp, path)
+    except IOError as e:
+        raise IOError(
+            f"rename {tmp} -> {path} failed; original is intact at {old}, "
+            f"new data at {tmp}"
+        ) from e
+    fs.delete(old, recursive=True)
 
 
 def _split_dir(path: str) -> "tuple[str, str]":

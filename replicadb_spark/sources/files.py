@@ -105,6 +105,24 @@ def read_csv(
     return df
 
 
+def read_or_none(
+    spark: SparkSession, path: str, fmt: str = "parquet"
+) -> DataFrame | None:
+    """``path`` read as ``fmt``, or None ONLY when the path does not
+    exist (a sink's or a state's first run). Any other failure raises: a
+    corrupt or unreadable sink or state must fail loudly, never read as
+    empty — an incremental merge would then skip the PK merge and land
+    duplicate keys, and a streaming state fold would silently reset."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.format(fmt).load(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
 def read_file(
     spark: SparkSession,
     path: str,

@@ -40,6 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from replicadb_spark.modes import latest_per_key
+from replicadb_spark.sources.files import read_or_none
+
 
 def read_event_stream(
     spark: SparkSession,
@@ -115,23 +118,6 @@ def _start_batches(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _read_parquet_or_none(spark: SparkSession, path: str):
-    """Read a state/snapshot parquet, returning None ONLY when the path
-    genuinely doesn't exist (first batch). Any other failure re-raises:
-    a corrupt or unreadable state must fail the batch loudly, never
-    silently reset to this batch's rows — the shared contract of every
-    foreachBatch merger in this module."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cls = e.getErrorClass() if hasattr(e, "getErrorClass") else None
-        if cls != "PATH_NOT_FOUND" and "Path does not exist" not in str(e):
-            raise
-        return None
 
 
 def stream_tumbling_agg(
@@ -284,10 +270,8 @@ def stream_incremental_upsert(
 
         spark = batch_df.sparkSession
         # newest row per PK within the batch, then merge over the snapshot
-        deduped = upsert_dataframe(
-            batch_df.limit(0), batch_df, pk_columns, order_column=order_column
-        )
-        current = _read_parquet_or_none(spark, sink_path)
+        deduped = latest_per_key(batch_df, pk_columns, order_column)
+        current = read_or_none(spark, sink_path)
         if current is None:
             merged = deduped
         else:
@@ -427,7 +411,7 @@ def stream_incremental_agg(
 
         spark = batch_df.sparkSession
         delta = agg_partials(batch_df, keys, value_col)
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -543,7 +527,7 @@ def stream_bottomk_sample(
                 state_path
             )
             return
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -617,7 +601,7 @@ def stream_heavy_hitters(
             # empty either way).
             merged = delta
         else:
-            current = _read_parquet_or_none(spark, state_path)
+            current = read_or_none(spark, state_path)
             if current is None:
                 merged = delta
             else:
@@ -723,7 +707,7 @@ def stream_outlier_profile(
                 state_path
             )
             return
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -788,7 +772,7 @@ def stream_kmv_distinct(
                 state_path
             )
             return
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -834,7 +818,7 @@ def _psi_merge_fn(state_path: str, value_col: str, bounds: "list[float]"):
                 state_path
             )
             return
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -951,7 +935,7 @@ def stream_cdc_apply(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        current = _read_parquet_or_none(spark, snapshot_path)
+        current = read_or_none(spark, snapshot_path)
         if batch_id == 0 and not seed_snapshot:
             current = None  # fresh checkpoint: ignore any stale snapshot
         if current is None:
@@ -1369,7 +1353,7 @@ def _dq_merge_fn(state_path: str, rules: list):
                 state_path
             )
             return
-        current = _read_parquet_or_none(spark, state_path)
+        current = read_or_none(spark, state_path)
         if current is None:
             merged = delta
         else:
@@ -1437,7 +1421,7 @@ def dq_report(spark: SparkSession, state_path: str, rules: list) -> DataFrame:
 
     row_rules = [r for r in rules if isinstance(r, Rule)]
     count_rules = [r for r in rules if isinstance(r, CountRule)]
-    st = _read_parquet_or_none(spark, state_path)
+    st = read_or_none(spark, state_path)
     if st is None:
         base = {"__n": 0, **{f"__c{i}": 0 for i in range(len(row_rules))}}
     else:
@@ -1528,8 +1512,6 @@ def stream_jdbc_replica(
             sink_params=dict(sink_params or {}),
         )
         if order_column is not None and mode == "incremental":
-            from pyspark.sql import Window
-
             from replicadb_spark.modes import sink_primary_keys
 
             if not pk_cache:
@@ -1539,12 +1521,7 @@ def stream_jdbc_replica(
             pks = list(pk_cache)
             colmap = {c.lower(): c for c in batch_df.columns}
             pks = [colmap.get(p.lower(), p) for p in pks]
-            w = Window.partitionBy(*pks).orderBy(F.col(order_column).desc())
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            batch_df = latest_per_key(batch_df, pks, order_column)
         run_jdbc_mode(batch_df.sparkSession, job, batch_df)
 
     return _start_batches(
@@ -1704,15 +1681,9 @@ def stream_gopher_screen(
     from replicadb_spark.functions.text import gopher_screen
 
     screened = gopher_screen(source, id_cols=id_cols, text_col=text_col)
-    writer = (
-        screened.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return stream_file_replica(
+        screened, out_path, checkpoint, available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_bucketed_replica(
@@ -1955,17 +1926,7 @@ def stream_snapshot_replica(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
-        if order_column is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*pk_columns).orderBy(
-                F.col(order_column).desc()
-            )
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+        batch_df = latest_per_key(batch_df, pk_columns, order_column)
         stat_cols = [prune_column] if prune_column else None
         if current_snapshot(table_path) is None:
             snapshot_commit(
@@ -2022,17 +1983,7 @@ def stream_bucketed_snapshot_replica(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
-        if order_column is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*pk_columns).orderBy(
-                F.col(order_column).desc()
-            )
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+        batch_df = latest_per_key(batch_df, pk_columns, order_column)
         if current_snapshot(table_path) is None:
             snapshot_commit_bucketed(
                 batch_df, table_path,
@@ -2106,15 +2057,9 @@ def stream_dsir_screen(
         F.size(toks).cast("long").alias("n_terms"),
         weight.alias("weight"),
     ).withColumn("keep", F.col("weight") >= F.lit(float(threshold)))
-    writer = (
-        screened.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return stream_file_replica(
+        screened, out_path, checkpoint, available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_bpe_tokenize(
@@ -2140,15 +2085,9 @@ def stream_bpe_tokenize(
     from replicadb_spark.functions.bpe import bpe_tokenize
 
     tok = bpe_tokenize(source, id_col, text_col, merges, with_ids=with_ids)
-    writer = (
-        tok.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    return stream_file_replica(
+        tok, out_path, checkpoint, available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_snapshot_cdc_replica(
@@ -2219,17 +2158,7 @@ def stream_snapshot_cdc_replica(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
-        if order_column is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*pk_columns).orderBy(
-                F.col(order_column).desc()
-            )
-            batch_df = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+        batch_df = latest_per_key(batch_df, pk_columns, order_column)
         stat_cols = [prune_column] if prune_column else None
         is_del = F.col(op_col) == delete_op
         if current_snapshot(table_path) is None:

@@ -74,6 +74,21 @@ def test_every_clause_combination_matches_model(spark, tmp_path, wm, wnm, bs):
             "when_matched": wm, "when_not_matched": wnm,
             "not_matched_by_source": bs,
         }
+    if wm == "update":
+        # a delete_when that matches no row leaves the same outcome; it
+        # takes the tombstone-aware plan (a merge record) instead of the
+        # upsert plan, so both plans are pinned to the model
+        path_dw = _uri(tmp_path, f"mg_dw_{wnm}_{bs}")
+        snapshot_commit(_df(spark, TABLE), path_dw, stat_columns=["id"])
+        sid = snapshot_merge(
+            spark, path_dw, _df(spark, STAGE), pk_columns=["id"],
+            when_matched=wm, when_not_matched=wnm,
+            not_matched_by_source=bs, delete_when=F.lit(False),
+        )
+        got = {r["id"]: r["v"]
+               for r in snapshot_read(spark, path_dw).collect()}
+        assert got == _model(wm, wnm, bs), (wm, wnm, bs, "delete_when")
+        assert snapshot_record(path_dw, sid)["clauses"]["delete_when"] is True
 
 
 def test_upsert_combination_delegates_and_matches(spark, tmp_path):

@@ -24,6 +24,7 @@ from replicadb_spark.operators.snapshot_table import (
     snapshot_delete,
     snapshot_expire,
     snapshot_history,
+    snapshot_merge,
     snapshot_read,
     snapshot_schema,
     snapshot_upsert,
@@ -221,21 +222,34 @@ def test_nested_nullability_is_not_schema_drift(spark, tmp_path):
     assert got == [1, 2]
 
 
-def test_strict_upsert_with_wider_staging_stays_readable(spark, tmp_path):
+@pytest.mark.parametrize("call", [
+    "upsert", "merge_delete_when", "merge_update_columns",
+])
+def test_strict_upsert_with_wider_staging_stays_readable(
+    spark, tmp_path, call
+):
     """ADVICE r10 (medium): evolve=False upsert with a WIDENED staging
     type must not write wide physical files under a narrow pin — the
     staging batch is cast down to the pinned schema and every
-    subsequent read of the new snapshot works."""
+    subsequent read of the new snapshot works. The full-row merge with
+    a tombstone flag and the column-subset merge share that cast-down
+    step, so all three callers are pinned."""
     path = _uri(tmp_path, "occ_wn")
     snapshot_commit(
         spark.createDataFrame([(1, 10), (2, 20)], "id long, v int"), path,
         stat_columns=["id"],
     )
-    snapshot_upsert(
-        spark, path,
-        spark.createDataFrame([(2, 22), (3, 33)], "id long, v long"),
-        pk_columns=["id"],
-    )
+    wide = spark.createDataFrame([(2, 22), (3, 33)], "id long, v long")
+    if call == "upsert":
+        snapshot_upsert(spark, path, wide, pk_columns=["id"])
+    elif call == "merge_delete_when":
+        snapshot_merge(
+            spark, path, wide, pk_columns=["id"], delete_when=F.lit(False)
+        )
+    else:
+        snapshot_merge(
+            spark, path, wide, pk_columns=["id"], update_columns=["v"]
+        )
     cur = snapshot_read(spark, path)
     assert dict(cur.dtypes)["v"] == "int"  # pin unchanged
     got = {r["id"]: r["v"] for r in cur.collect()}  # actually READS files
