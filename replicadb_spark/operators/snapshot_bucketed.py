@@ -48,7 +48,6 @@ import uuid
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from replicadb_spark.fs import TableFS, join
 from replicadb_spark.operators.manifest import (
@@ -68,7 +67,7 @@ from replicadb_spark.operators.snapshot_table import (
     _resolve,
     _tip,
 )
-from replicadb_spark.sinks.files import _bucket_of
+from replicadb_spark.sinks.files import _bucket_of, _touched_buckets
 
 
 def _write_bucket_files(
@@ -187,11 +186,7 @@ def snapshot_upsert_bucketed(
     missing = [c for c in cols if c not in staging.columns]
     if missing:
         raise ValueError(f"staging batch lacks table columns {missing}")
-    touched = sorted(
-        staging.agg(
-            F.collect_set(F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)))
-        ).first()[0]
-    )
+    touched = _touched_buckets(staging, bucket_cols, n_buckets)
     touched_set = set(touched)
     victims = [
         f for f in files

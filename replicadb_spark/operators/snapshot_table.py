@@ -1414,8 +1414,11 @@ def _unstage(staged: DataFrame) -> None:
     """Free a :func:`_staged` frame's checkpoint blocks now, not when JVM
     GC lets the ContextCleaner (which would let a long streaming session
     pile up one batch's blocks per commit). Only after the commit
-    returns: no lazy frame over the batch outlives it."""
-    staged._jdf.logicalPlan().rdd().unpersist(False)
+    returns: no lazy frame over the batch outlives it. Goes through
+    ``SparkContext.unpersistRDD`` — ``RDD.unpersist`` makes the same
+    call but first logs a truncated-lineage warning per commit."""
+    rdd_id = staged._jdf.logicalPlan().rdd().id()
+    staged.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd_id, False)
 
 
 def _victims(

@@ -221,6 +221,19 @@ def _bucket_of(filename: str) -> "int | None":
     return int(m.group(1)) if m else None
 
 
+def _touched_buckets(df, bucket_cols, n_buckets: int) -> "list[int]":
+    """Sorted ids of the buckets ``df``'s rows hash into under Spark's
+    bucketBy rule (``pmod(murmur3 hash, n_buckets)``), from one
+    ``collect_set`` aggregate."""
+    from pyspark.sql import functions as F
+
+    return sorted(
+        df.agg(
+            F.collect_set(F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)))
+        ).first()[0]
+    )
+
+
 def upsert_bucketed_table(
     spark,
     staging: DataFrame,
@@ -263,8 +276,6 @@ def upsert_bucketed_table(
     Spark-readable URI, not just the driver's local disk."""
     import uuid
 
-    from pyspark.sql import functions as F
-
     from replicadb_spark.fs import TableFS, join
 
     from replicadb_spark.modes import upsert_dataframe
@@ -282,13 +293,7 @@ def upsert_bucketed_table(
             mode="overwrite",
             path=path,
         )
-        return sorted(
-            r["b"]
-            for r in spark.table(table)
-            .select(F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)).alias("b"))
-            .distinct()
-            .collect()
-        )
+        return _touched_buckets(staging, bucket_cols, n_buckets)
     if path is None:
         loc = [
             r["data_type"]
@@ -302,14 +307,7 @@ def upsert_bucketed_table(
             raise ValueError(f"cannot resolve the storage path of {table}")
 
     cols = spark.table(table).columns
-    touched = sorted(
-        r["b"]
-        for r in staging.select(
-            F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+    touched = _touched_buckets(staging, bucket_cols, n_buckets)
     if not touched:
         return []
     touched_set = set(touched)

@@ -5,27 +5,37 @@ mode is no longer supported", cli/ToolOptions.java:724) — SURVEY §1.4
 marks this an optional extension. It is included because the batch
 operators here (tumbling agg, sessionization, incremental upsert) all
 have natural streaming twins, and a training-data pipeline ingests
-continuously:
+continuously.
 
-- stream_tumbling_agg  = events_tumbling_agg with a watermark
-- stream_sessionize    = events_sessionize via session_window
-- stream_file_replica  = continuous file→file replication (the streaming
-  form of `complete` mode: append-only micro-batches)
+Thirty-five twins, plus the shared additive-counts maintainer
+(:func:`stream_additive_counts`) two of them are built on:
 
-Twenty-one twins as of round 6, in three shapes:
-
-1. built-in stateful operators (tumbling/sliding/session windows,
-   stream-stream interval join);
-2. foreachBatch mergeable-state folds with parquet state and, where
-   counts merge non-idempotently, a batch-id replay guard
-   (incremental upsert, CDC apply, live-JDBC MERGE replication,
-   persisted-IVF index append, KMV distinct/bottom-k, Misra-Gries
-   heavy hitters, PSI drift, DQ monitor, rollup partials,
-   neardup-vs-corpus screen, outlier profile);
-3. custom applyInPandasWithState operators for the non-associative /
+1. Eight DataFrame-returning operators the caller starts: four
+   built-in stateful ones (tumbling/sliding/session windows, the
+   stream-stream interval join) and four custom
+   ``applyInPandasWithState`` ones for the non-associative /
    order-dependent recursions built-ins can't express (dedup with
-   duplicate accounting, CUSUM changepoints, the as-of state join,
-   the online SemDeDup screen).
+   duplicate accounting, CUSUM changepoints, the as-of state join, the
+   online SemDeDup screen).
+2. Four file-sink writers (:func:`stream_file_replica` and the Gopher,
+   DSIR and BPE screens on top of it): exactly-once through the file
+   sink's own commit log.
+3. Twenty-three ``foreachBatch`` twins on three shared pieces:
+
+   - :func:`_start_batches`, the writer skeleton (checkpoint, output
+     mode, bounded AvailableNow trigger — the only trigger any caller
+     runs);
+   - :func:`_state_fold`, the parquet-state fold of nine twins
+     (incremental upsert and GROUP BY, bottom-k, heavy hitters,
+     outlier profile, KMV, PSI, CDC apply, DQ): read the state, fold
+     the batch onto it, write the new state aside and swap it in;
+   - :func:`_admitted`, the admission rule (:func:`_should_apply`:
+     skip empty batches, then the snapshot commit-log replay guard)
+     for the thirteen twins that write an external store and must not
+     run on an empty or replayed batch. The folds run without it —
+     they must see an empty batch 0 to reset stale state — and so
+     does :func:`stream_snapshot_changes`, whose body returns on an
+     empty batch itself.
 
 Every twin has a batch-equality test (N micro-batches ≡ one batch run)
 driven bounded with Trigger.AvailableNow (tests/test_streaming.py);
@@ -62,7 +72,6 @@ def _should_apply(
     batch_id: int,
     *,
     guard_path: "str | None" = None,
-    skip_empty: bool = True,
 ) -> bool:
     """The twins' shared per-batch admission check, factored so it is
     property-tested ONCE (tests/test_streaming.py) instead of
@@ -73,7 +82,7 @@ def _should_apply(
     and must not be re-applied — a redelivered batch burning a second
     snapshot id is the at-least-once → exactly-once gap every
     snapshot-committing twin has to close."""
-    if skip_empty and batch_df.isEmpty():
+    if batch_df.isEmpty():
         return False
     if guard_path is not None:
         from replicadb_spark.operators.snapshot_table import (
@@ -86,38 +95,73 @@ def _should_apply(
     return True
 
 
-def _start_batches(
-    stream: DataFrame,
-    checkpoint: str,
-    body,
-    *,
-    available_now: bool = True,
-    output_mode: str = "update",
-    guard_path: "str | None" = None,
-    skip_empty: bool = True,
-) -> StreamingQuery:
-    """Start a ``foreachBatch`` writer with the twins' shared skeleton
-    (checkpoint wiring, output mode, bounded AvailableNow trigger) and
-    the :func:`_should_apply` admission check wrapped around ``body``
-    — so a new twin is only its batch logic. ``skip_empty=False``
-    preserves the pre-r14 behavior of the parquet-state twins that ran
-    their own (idempotent) fold on empty batches."""
+def _admitted(body, guard_path: "str | None" = None):
+    """``body`` run only on the batches :func:`_should_apply` admits."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if _should_apply(
-            batch_df, batch_id,
-            guard_path=guard_path, skip_empty=skip_empty,
-        ):
+        if _should_apply(batch_df, batch_id, guard_path=guard_path):
             body(batch_df, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
+    return apply_batch
+
+
+def _start_batches(
+    stream: DataFrame, checkpoint: str, body, *, output_mode: str = "update"
+) -> StreamingQuery:
+    """Start a bounded (AvailableNow) ``foreachBatch`` writer running
+    ``body`` — the twins' shared skeleton, so a new twin is only its
+    batch logic."""
+    return (
+        stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _state_fold(state_path: str, fold):
+    """The ``foreachBatch`` body of a parquet-state twin:
+    ``fold(batch_df, batch_id, current)`` maps the batch and the state
+    read from ``state_path`` (None when absent) to the new state, or to
+    None when the batch is a replay the state already holds.
+
+    Batch-0 rule, each fold's own: a lineage-scoped fold ignores
+    ``current`` at batch 0 — state before a checkpoint's first batch
+    is empty by definition, so this both wipes a state that outlived a
+    DEAD checkpoint (its batch ids restart at 0 and would otherwise
+    blend into, or no-op against, the new stream) and keeps a batch-0
+    replay idempotent. Folds run on empty batches for exactly that
+    reset.
+
+    The new state is written to the sibling ``<state>.__replicadb_tmp__``
+    and swapped in by :func:`sinks.files.swap_dir` (directly to the
+    path when no state exists yet): the write never reads the files it
+    replaces, so no checkpoint has to cut the lineage, and a write that
+    fails part-way leaves the previous state intact instead of deleted
+    — a deleted state would read as absent on the next batch and
+    silently reset. A state that exists but cannot be read fails the
+    batch (:func:`sources.files.read_or_none`)."""
+    from replicadb_spark.sinks.files import swap_dir
+
+    base = state_path.rstrip("/")
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        current = read_or_none(spark, state_path)
+        new = fold(batch_df, batch_id, current)
+        if new is None:
+            return
+        if current is None:
+            new.write.mode("overwrite").parquet(state_path)
+            return
+        new.write.mode("overwrite").parquet(base + ".__replicadb_tmp__")
+        swap_dir(
+            spark, state_path, base + ".__replicadb_tmp__",
+            base + ".__replicadb_old__",
+        )
+
+    return apply_batch
 
 
 def stream_tumbling_agg(
@@ -251,13 +295,15 @@ def stream_incremental_upsert(
     *,
     pk_columns: list[str],
     order_column: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous incremental replication: each micro-batch MERGEs into a
     parquet snapshot keyed on ``pk_columns`` (last-write-wins by
     ``order_column``) — the streaming twin of the reference's
     `incremental` mode (SURVEY §2.3 M3), via foreachBatch + the same
-    modes.upsert_dataframe used in batch.
+    modes.upsert_dataframe used in batch. The read → merge → swap
+    skeleton is :func:`_state_fold`; unlike the lineage-scoped sketch
+    folds, batch 0 merges onto an existing snapshot (a pre-seeded sink
+    is the initial-load-then-stream shape).
 
     Scale note: rewriting a parquet snapshot per batch is the plain-file
     stand-in for a real upsert sink (JDBC MERGE via modes.run_jdbc_mode,
@@ -266,24 +312,16 @@ def stream_incremental_upsert(
     """
     from replicadb_spark.modes import upsert_dataframe
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         # newest row per PK within the batch, then merge over the snapshot
         deduped = latest_per_key(batch_df, pk_columns, order_column)
-        current = read_or_none(spark, sink_path)
         if current is None:
-            merged = deduped
-        else:
-            merged = upsert_dataframe(current, deduped, pk_columns, order_column=order_column)
-        # localCheckpoint cuts the lineage so the overwrite does not read
-        # the files it is replacing
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(sink_path)
+            return deduped
+        return upsert_dataframe(
+            current, deduped, pk_columns, order_column=order_column
+        )
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(sink_path, fold))
 
 
 def stream_dedup_first_seen(
@@ -364,21 +402,19 @@ def stream_file_replica(
     sink_path: str,
     checkpoint: str,
     fmt: str = "parquet",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous file replication: the streaming form of complete/append
     mode — each micro-batch lands as new part-files, exactly-once via the
     checkpoint + file-sink commit log (stronger than the reference's
     non-transactional inserts)."""
-    writer = (
+    return (
         source.writeStream.format(fmt)
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_incremental_agg(
@@ -388,7 +424,6 @@ def stream_incremental_agg(
     *,
     keys: list[str],
     value_col: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained GROUP BY: each micro-batch reduces to
     mergeable partials (operators/rollup.agg_partials) and merges them
@@ -399,7 +434,9 @@ def stream_incremental_agg(
     Because the partial state is associative+commutative (count/sum add,
     min/max fold, DECIMAL sums order-independent), the maintained state
     equals a full batch recompute after ANY micro-batch split of the
-    input — tests drive it bounded and assert exactly that.
+    input — tests drive it bounded and assert exactly that. Batch 0
+    merges onto an existing state like stream_incremental_upsert, so a
+    corrupt state fails the batch (:func:`_state_fold`).
 
     Scale: per batch, one |batch| partial-agg shuffle + a |keys|-row
     state merge; state size is bounded by key cardinality, never by
@@ -407,21 +444,11 @@ def stream_incremental_agg(
     """
     from replicadb_spark.operators.rollup import agg_partials, merge_partials
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = agg_partials(batch_df, keys, value_col)
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            merged = merge_partials(current, delta, keys)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        return delta if current is None else merge_partials(current, delta, keys)
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(state_path, fold))
 
 
 def stream_neardup_vs_corpus(
@@ -436,7 +463,6 @@ def stream_neardup_vs_corpus(
     num_hashes: int = 128,
     bands: int = 64,
     threshold: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming near-duplicate screening of an ingest stream against a
     STATIC corpus: each micro-batch runs the bipartite banded-LSH
@@ -459,8 +485,6 @@ def stream_neardup_vs_corpus(
     from replicadb_spark.functions.dedup import minhash_dedup_pairs_bipartite
 
     def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         pairs = minhash_dedup_pairs_bipartite(
             corpus, batch_df, id_col, text_col,
             k=k, num_hashes=num_hashes, bands=bands, threshold=threshold,
@@ -468,9 +492,7 @@ def stream_neardup_vs_corpus(
         pairs.write.mode("append").parquet(out_path)
 
     return _start_batches(
-        source, checkpoint, screen_batch,
-        available_now=available_now, skip_empty=False,
-        output_mode="append",
+        source, checkpoint, _admitted(screen_batch), output_mode="append"
     )
 
 
@@ -482,7 +504,6 @@ def stream_bottomk_sample(
     id_col: str,
     keep: list[str],
     k: int,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained bottom-k (KMV) sample: each micro-batch's
     k smallest xxhash64(id) rows merge with the persisted sample and
@@ -505,48 +526,29 @@ def stream_bottomk_sample(
     shuffle-free partial top-k. Duplicate ids are a caller data error
     under either engine.
 
-    Stale-state guard: batch 0 of a (re)created checkpoint OVERWRITES
-    any surviving state file — a state parquet that outlives its
-    checkpoint belongs to a dead lineage and must not leak into the
-    new stream's sample.
+    Stale-state guard: batch 0 of a (re)created checkpoint REPLACES any
+    surviving state — the lineage-scoped batch-0 rule of
+    :func:`_state_fold` — so a dead lineage's sample cannot leak into
+    the new stream's.
 
     Scale: per batch one TakeOrdered partial top-k over the batch plus
     a merge of ≤ 2k rows; state size is k rows forever.
     """
     from replicadb_spark.operators.quantiles import bottomk_sample
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = bottomk_sample(batch_df, id_col, k=k, keep=keep)
-        if batch_id == 0:
-            # fresh lineage: state before batch 0 is empty by
-            # definition, so this both resets stale state from a dead
-            # checkpoint AND stays idempotent under a batch-0 replay
-            delta.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-            return
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            # dropDuplicates makes the merge SET-semantic: an
-            # at-least-once foreachBatch replay re-contributes identical
-            # rows, which collapse instead of double-occupying sample
-            # slots — the batch is idempotent for free
-            merged = (
-                current.unionByName(delta)
-                .dropDuplicates()
-                .orderBy("__rk")
-                .limit(k)
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        if batch_id == 0 or current is None:
+            return delta
+        # dropDuplicates makes the merge SET-semantic: an at-least-once
+        # foreachBatch replay re-contributes identical rows, which
+        # collapse instead of double-occupying sample slots — the batch
+        # is idempotent for free
+        return (
+            current.unionByName(delta).dropDuplicates().orderBy("__rk").limit(k)
+        )
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(state_path, fold))
 
 
 def stream_heavy_hitters(
@@ -556,7 +558,6 @@ def stream_heavy_hitters(
     *,
     key_col: str,
     k: int = 64,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained Misra-Gries heavy-hitter summary: each
     micro-batch's MG summary merges with the persisted ≤ k-counter
@@ -570,55 +571,40 @@ def stream_heavy_hitters(
     never exact and never meant to be — the test pins the superset
     guarantee, not equality.
 
-    Stale-state guard: batch 0 of a (re)created checkpoint OVERWRITES
-    any surviving state file (a state parquet that outlives its
-    checkpoint belongs to a dead lineage; its restarting batch ids
-    would otherwise make the replay guard no-op every batch forever);
-    batches > 0 carry the last applied batch id so at-least-once
-    replays of the SAME lineage are exact no-ops.
+    Stale-state guard: batch 0 of a (re)created checkpoint REPLACES any
+    surviving state (:func:`_state_fold`'s lineage-scoped batch-0 rule;
+    a dead lineage's far-ahead ``last_batch`` would otherwise make the
+    replay guard no-op every batch forever); batches > 0 carry the last
+    applied batch id, and the fold returns None for an at-least-once
+    replay of the SAME lineage, so it is an exact no-op.
 
     Scale: per batch a ≤ partitions×k-row shuffle; state is ≤ k rows
     regardless of stream length or key cardinality.
     """
     from replicadb_spark.operators.heavy_hitters import mg_summaries
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = (
             mg_summaries(batch_df, key_col, k=k)
             .groupBy("key")
             .agg(F.sum("est").alias("est"))
         )
-        if batch_id == 0:
-            # fresh lineage: state before batch 0 is empty by
-            # definition. Without this wipe, a state parquet surviving
-            # from a DEAD checkpoint (batch ids restart at 0) would
-            # make the `applied >= batch_id` replay guard silently
-            # no-op every batch forever — permanently stale state with
-            # no error. Resetting on batch 0 is also exactly right for
-            # an at-least-once REPLAY of batch 0 (pre-batch state was
-            # empty either way).
+        if batch_id == 0 or current is None:
             merged = delta
         else:
-            current = read_or_none(spark, state_path)
-            if current is None:
-                merged = delta
-            else:
-                # replay guard: counters are NOT set-semantic (a
-                # re-applied batch double-counts and breaks the
-                # est ≤ truth bound), so the state carries the last
-                # applied batch_id and an at-least-once replay becomes
-                # a no-op
-                applied = current.agg(F.max("last_batch")).first()[0]
-                if applied is not None and applied >= batch_id:
-                    return
-                merged = (
-                    current.drop("last_batch")
-                    .unionByName(delta)
-                    .groupBy("key")
-                    .agg(F.sum("est").alias("est"))
-                )
+            # replay guard: counters are NOT set-semantic (a re-applied
+            # batch double-counts and breaks the est ≤ truth bound), so
+            # the state carries the last applied batch_id and an
+            # at-least-once replay becomes a no-op
+            applied = current.agg(F.max("last_batch")).first()[0]
+            if applied is not None and applied >= batch_id:
+                return None
+            merged = (
+                current.drop("last_batch")
+                .unionByName(delta)
+                .groupBy("key")
+                .agg(F.sum("est").alias("est"))
+            )
         # MG prune back to ≤ k counters: subtract the (k+1)-th largest
         # est from all, drop non-positive — uniform subtraction keeps
         # the under-estimate bound additive across merges
@@ -628,7 +614,7 @@ def stream_heavy_hitters(
             .limit(k + 1)
             .agg(F.min("e").alias("pivot"), F.count(F.lit(1)).alias("n"))
         )
-        pruned = (
+        return (
             merged.crossJoin(F.broadcast(kth))
             .where((F.col("n") <= k) | (F.col("est") > F.col("pivot")))
             .select(
@@ -639,12 +625,8 @@ def stream_heavy_hitters(
                 F.lit(batch_id).cast("long").alias("last_batch"),
             )
         )
-        pruned.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(state_path, fold))
 
 
 def stream_outlier_profile(
@@ -656,7 +638,6 @@ def stream_outlier_profile(
     id_col: str,
     value_col: str,
     k_per_key: int = 1024,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained PER-KEY bottom-k (KMV) value sample —
     the state behind a streaming robust median/MAD outlier profile
@@ -672,8 +653,8 @@ def stream_outlier_profile(
     key's full value multiset and the profile is bit-identical to
     batch mad_outlier_profile — the test pins that), idempotent under
     at-least-once replay via set-semantic merge (ids must be unique),
-    and batch 0 of a fresh checkpoint lineage wipes dead-lineage
-    state.
+    and batch 0 of a fresh checkpoint lineage replaces dead-lineage
+    state (:func:`_state_fold`).
 
     Scale: per batch ONE shuffle on the key (the per-key top-k
     window over batch ∪ state); state is ≤ k_per_key rows per key
@@ -690,9 +671,7 @@ def stream_outlier_profile(
             .drop("__rn")
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = _prune(
             batch_df.select(
                 F.col(key_col).alias("key"),
@@ -700,24 +679,11 @@ def stream_outlier_profile(
                 F.col(value_col).alias("value"),
             )
         )
-        if batch_id == 0:
-            # fresh lineage: wipe dead-checkpoint state (idempotent
-            # under a batch-0 replay — pre-batch state is empty)
-            delta.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-            return
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            merged = _prune(current.unionByName(delta).dropDuplicates())
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        if batch_id == 0 or current is None:
+            return delta
+        return _prune(current.unionByName(delta).dropDuplicates())
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(state_path, fold))
 
 
 def outlier_profile_from_state(
@@ -742,7 +708,6 @@ def stream_kmv_distinct(
     *,
     key_col: str,
     k: int,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained KMV distinct-count sketch: each
     micro-batch's bottom-k DISTINCT hash ranks merge with the persisted
@@ -756,43 +721,25 @@ def stream_kmv_distinct(
     re-delivered batches (at-least-once replay) and genuinely repeated
     keys collapse into the same rank: the state is bit-identical to a
     batch kmv_distinct_sketch over everything streamed so far, under
-    ANY split. Same batch-0 stale-state overwrite guard as the other
-    sketch twins.
+    ANY split. Same batch-0 stale-state replacement as the other
+    sketch twins (:func:`_state_fold`).
 
     Scale: per batch one Arrow pre-prune + distinct over ≤ k·batches
     candidate rows, then a ≤ 2k merge; state is k rows forever."""
     from replicadb_spark.operators.quantiles import kmv_distinct_sketch
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = kmv_distinct_sketch(batch_df, key_col, k=k)
-        if batch_id == 0:
-            delta.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-            return
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            merged = (
-                current.unionByName(delta)
-                .distinct()
-                .orderBy("__rk")
-                .limit(k)
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        if batch_id == 0 or current is None:
+            return delta
+        return current.unionByName(delta).distinct().orderBy("__rk").limit(k)
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(state_path, fold))
 
 
 def _psi_merge_fn(state_path: str, value_col: str, bounds: "list[float]"):
-    """The foreachBatch merge for stream_psi_drift, module-level so the
-    replay-guard test can drive it with fabricated batch ids."""
+    """The :func:`_state_fold` body of stream_psi_drift, module-level
+    so the replay-guard test can drive it with fabricated batch ids."""
 
     def bucketed_counts(df: DataFrame, batch_id: int) -> DataFrame:
         # plain comparison chain, not a higher-order filter: HOF lambda
@@ -809,33 +756,20 @@ def _psi_merge_fn(state_path: str, value_col: str, bounds: "list[float]"):
             .withColumn("last_batch", F.lit(batch_id).cast("long"))
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = bucketed_counts(batch_df, batch_id)
-        if batch_id == 0:
-            delta.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-            return
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            applied = current.agg(F.max("last_batch")).first()[0]
-            if applied is not None and applied >= batch_id:
-                return  # at-least-once replay of an applied batch: no-op
-            merged = (
-                current.unionByName(delta)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("c").alias("c"),
-                    F.max("last_batch").alias("last_batch"),
-                )
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        if batch_id == 0 or current is None:
+            return delta
+        applied = current.agg(F.max("last_batch")).first()[0]
+        if applied is not None and applied >= batch_id:
+            return None  # at-least-once replay of an applied batch: no-op
+        return (
+            current.unionByName(delta)
+            .groupBy("bucket")
+            .agg(F.sum("c").alias("c"), F.max("last_batch").alias("last_batch"))
+        )
 
-    return merge_batch
+    return _state_fold(state_path, fold)
 
 
 def stream_psi_drift(
@@ -845,7 +779,6 @@ def stream_psi_drift(
     *,
     value_col: str,
     bounds: "list[float]",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained PSI drift monitor: the reference decile
     ``bounds`` are fixed (computed once from the training/reference
@@ -858,17 +791,15 @@ def stream_psi_drift(
     equivalence test proves it).
 
     Scale: per batch one ≤(len(bounds)+1)-key aggregate; state is one
-    row per bucket forever. Same batch-0 stale-state overwrite guard as
-    the sketch twins, and — because COUNTS are not set-semantic (a
-    re-applied batch double-counts, the stream_heavy_hitters hazard,
-    unlike the KMV twin's distinct-union) — the state carries the last
-    applied batch id and an at-least-once replay becomes a no-op."""
-
-    merge_batch = _psi_merge_fn(state_path, value_col, bounds)
+    row per bucket forever. Same batch-0 stale-state replacement as the
+    sketch twins (:func:`_state_fold`), and — because COUNTS are not
+    set-semantic (a re-applied batch double-counts, the
+    stream_heavy_hitters hazard, unlike the KMV twin's distinct-union)
+    — the state carries the last applied batch id and the fold returns
+    None for an at-least-once replay, so it is a no-op."""
 
     return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
+        source, checkpoint, _psi_merge_fn(state_path, value_col, bounds)
     )
 
 
@@ -900,8 +831,6 @@ def stream_cdc_apply(
     keys: "list[str]",
     op_col: str = "op",
     order_col: str = "seq",
-    available_now: bool = True,
-    seed_snapshot: bool = False,
 ) -> StreamingQuery:
     """Continuous CDC replication: each micro-batch is an ordered
     insert/update/delete changelog slice applied onto the maintained
@@ -918,13 +847,10 @@ def stream_cdc_apply(
     re-applies the SAME compacted ops — deletes and full-payload
     upserts are idempotent, so REPLAY needs no batch-id guard (unlike
     the count-merging PSI/heavy-hitter states). A FRESH checkpoint is
-    different: by default batch 0 rebuilds the snapshot from the batch
-    alone (same stale-state wipe the sketch twins do), so a reused
-    snapshot_path can't silently receive a replayed changelog on top
-    of stale state. Pass ``seed_snapshot=True`` to instead merge batch
-    0 onto a pre-seeded snapshot (initial-load-then-CDC replication) —
-    then snapshot_path must be empty or continuous with the
-    checkpoint, the caller's contract.
+    different: batch 0 rebuilds the snapshot from the batch alone (the
+    lineage-scoped batch-0 rule of :func:`_state_fold`, as in the
+    sketch twins), so a reused snapshot_path can't silently receive a
+    replayed changelog on top of stale state.
 
     Scale: per batch one window shuffle over the BATCH's changes
     (compaction) + the co-partitioned anti-join/union of apply_diff —
@@ -933,27 +859,17 @@ def stream_cdc_apply(
     (stream_incremental_upsert's documented trade)."""
     from replicadb_spark.operators.cdc import apply_changelog
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        current = read_or_none(spark, snapshot_path)
-        if batch_id == 0 and not seed_snapshot:
-            current = None  # fresh checkpoint: ignore any stale snapshot
-        if current is None:
+    def fold(batch_df: DataFrame, batch_id: int, current):
+        if batch_id == 0 or current is None:
             payload = [
                 c for c in batch_df.columns if c not in (op_col, order_col)
             ]
             current = batch_df.select(*payload).limit(0)
-        merged = apply_changelog(
+        return apply_changelog(
             current, batch_df, keys, op_col=op_col, order_col=order_col
         )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            snapshot_path
-        )
 
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _state_fold(snapshot_path, fold))
 
 
 def stream_cusum_alerts(
@@ -1329,8 +1245,8 @@ def stream_semantic_dedup(
 
 
 def _dq_merge_fn(state_path: str, rules: list):
-    """The foreachBatch merge for stream_dq_monitor, module-level so the
-    replay-guard test can drive it with fabricated batch ids."""
+    """The :func:`_state_fold` body of stream_dq_monitor, module-level
+    so the replay-guard test can drive it with fabricated batch ids."""
     from replicadb_spark.operators.dq import CountRule, Rule
 
     row_rules = [r for r in rules if isinstance(r, Rule)]
@@ -1345,29 +1261,20 @@ def _dq_merge_fn(state_path: str, rules: list):
             "last_batch", F.lit(batch_id).cast("long")
         )
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, batch_id: int, current):
         delta = rule_counts(batch_df, batch_id)
-        if batch_id == 0:
-            delta.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-            return
-        current = read_or_none(spark, state_path)
-        if current is None:
-            merged = delta
-        else:
-            applied = current.agg(F.max("last_batch")).first()[0]
-            if applied is not None and applied >= batch_id:
-                return  # at-least-once replay of an applied batch: no-op
-            count_cols = [c for c in current.columns if c != "last_batch"]
-            merged = current.unionByName(delta).agg(
-                *[F.sum(c).alias(c) for c in count_cols],
-                F.max("last_batch").alias("last_batch"),
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_path)
+        if batch_id == 0 or current is None:
+            return delta
+        applied = current.agg(F.max("last_batch")).first()[0]
+        if applied is not None and applied >= batch_id:
+            return None  # at-least-once replay of an applied batch: no-op
+        count_cols = [c for c in current.columns if c != "last_batch"]
+        return current.unionByName(delta).agg(
+            *[F.sum(c).alias(c) for c in count_cols],
+            F.max("last_batch").alias("last_batch"),
+        )
 
-    return merge_batch
+    return _state_fold(state_path, fold)
 
 
 def stream_dq_monitor(
@@ -1376,14 +1283,13 @@ def stream_dq_monitor(
     checkpoint: str,
     *,
     rules: list,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous data-quality monitoring — the streaming twin of
     operators/dq.run_checks for its mergeable subset: every per-row
     conditional-count rule and the ``at_least(n)`` floor fold across
     micro-batches as exact count sums (ONE aggregate row of state,
-    batch-id replay guard identical to stream_psi_drift's since count
-    merging is not idempotent). ``dq_report`` reads the same (rule,
+    folded by :func:`_state_fold` with stream_psi_drift's batch-0 reset
+    and batch-id replay guard, since count merging is not idempotent). ``dq_report`` reads the same (rule,
     metric, threshold, passed) frame run_checks returns, off the state
     instead of a full rescan — the load-gate a continuously-replicating
     pipeline polls between batches.
@@ -1404,11 +1310,7 @@ def stream_dq_monitor(
             "unique() rules do not fold across micro-batches — use "
             "stream_kmv_distinct for approximate streaming uniqueness"
         )
-    merge_batch = _dq_merge_fn(state_path, rules)
-    return _start_batches(
-        source, checkpoint, merge_batch,
-        available_now=available_now, skip_empty=False,
-    )
+    return _start_batches(source, checkpoint, _dq_merge_fn(state_path, rules))
 
 
 def dq_report(spark: SparkSession, state_path: str, rules: list) -> DataFrame:
@@ -1458,7 +1360,6 @@ def stream_jdbc_replica(
     sink_params: "dict | None" = None,
     pk_columns: "list[str] | None" = None,
     order_column: "str | None" = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous replication into a LIVE JDBC database — each
     micro-batch runs the engine's own sink mode (modes.run_jdbc_mode:
@@ -1500,7 +1401,6 @@ def stream_jdbc_replica(
     pk_cache: list = []  # sink PK metadata discovered once, not per batch
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty-batch admission handled by _start_batches
         job = ReplicaJob(
             source_connect="stream://microbatch",
             sink_connect=sink_connect,
@@ -1524,10 +1424,7 @@ def stream_jdbc_replica(
             batch_df = latest_per_key(batch_df, pks, order_column)
         run_jdbc_mode(batch_df.sparkSession, job, batch_df)
 
-    return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now,
-    )
+    return _start_batches(source, checkpoint, _admitted(apply_batch))
 
 
 def stream_ivf_append(
@@ -1537,7 +1434,6 @@ def stream_ivf_append(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuous maintenance of the persisted IVF index
     (operators/ann_index): each micro-batch of newly-embedded vectors
@@ -1558,15 +1454,11 @@ def stream_ivf_append(
     from replicadb_spark.operators.ann_index import append_to_ivf_index
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty-batch admission handled by _start_batches
         append_to_ivf_index(
             batch_df, index_path, id_col=id_col, vec_col=vec_col
         )
 
-    return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now,
-    )
+    return _start_batches(source, checkpoint, _admitted(apply_batch))
 
 
 def stream_minhash_screen(
@@ -1578,7 +1470,6 @@ def stream_minhash_screen(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_est_jaccard: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #22: continuous near-dup SCREENING against the persisted
     MinHash index (operators/dedup_index) — the durable-store analog of
@@ -1614,7 +1505,6 @@ def stream_minhash_screen(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty-batch admission handled by _start_batches
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
@@ -1655,10 +1545,7 @@ def stream_minhash_screen(
         finally:
             batch_df.unpersist()
 
-    return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now,
-    )
+    return _start_batches(source, checkpoint, _admitted(apply_batch))
 
 
 def stream_gopher_screen(
@@ -1668,7 +1555,6 @@ def stream_gopher_screen(
     *,
     id_cols: tuple = ("doc_id", "source"),
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #23: the full 18-rule Gopher screen
     (functions/text.gopher_screen) applied CONTINUOUSLY to a document
@@ -1682,7 +1568,7 @@ def stream_gopher_screen(
 
     screened = gopher_screen(source, id_cols=id_cols, text_col=text_col)
     return stream_file_replica(
-        screened, out_path, checkpoint, available_now=available_now
+        screened, out_path, checkpoint
     )
 
 
@@ -1697,7 +1583,6 @@ def stream_bucketed_replica(
     n_buckets: int,
     sort_cols: "list[str] | tuple[str, ...] | None" = None,
     order_column: "str | None" = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #24: continuous replication into the BUCKETED layout —
     stream_jdbc_replica's semantics with sinks/files.upsert_bucketed_table
@@ -1730,7 +1615,6 @@ def stream_bucketed_replica(
     owner = source.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty-batch admission handled by _start_batches
         upsert_bucketed_table(
             batch_df.sparkSession,
             batch_df,
@@ -1744,10 +1628,7 @@ def stream_bucketed_replica(
         )
         owner.catalog.refreshTable(table)
 
-    return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now,
-    )
+    return _start_batches(source, checkpoint, _admitted(apply_batch))
 
 
 def stream_snapshot_ingest(
@@ -1756,7 +1637,6 @@ def stream_snapshot_ingest(
     checkpoint: str,
     *,
     stat_columns: "list[str] | None" = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #25: EXACTLY-ONCE continuous ingestion into the snapshot
     table (operators/snapshot_table) — each micro-batch becomes one
@@ -1779,15 +1659,13 @@ def stream_snapshot_ingest(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches
         snapshot_commit(
             batch_df, table_path,
             stat_columns=stat_columns, meta={"batch_id": batch_id},
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=table_path,
+        source, checkpoint, _admitted(apply_batch, table_path)
     )
 
 
@@ -1799,7 +1677,6 @@ def stream_snapshot_changes(
     *,
     pk_columns: "list[str]",
     change_col: str = "_change_type",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #27: the CDC-OUT feed of the snapshot table — continuously
     walk newly committed snapshot ids and emit each commit's row-level
@@ -1878,11 +1755,7 @@ def stream_snapshot_changes(
             finally:
                 log.unpersist()
 
-    return _start_batches(
-        commits, checkpoint, apply_batch,
-        available_now=available_now, skip_empty=False,
-        output_mode="append",
-    )
+    return _start_batches(commits, checkpoint, apply_batch, output_mode="append")
 
 
 def stream_snapshot_replica(
@@ -1893,7 +1766,6 @@ def stream_snapshot_replica(
     pk_columns: "list[str]",
     prune_column: "str | None" = None,
     order_column: "str | None" = None,
-    available_now: bool = True,
     evolve: bool = False,
 ) -> StreamingQuery:
     """Twin #26: continuous PK replication into the SNAPSHOT table —
@@ -1924,7 +1796,6 @@ def stream_snapshot_replica(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
         batch_df = latest_per_key(batch_df, pk_columns, order_column)
         stat_cols = [prune_column] if prune_column else None
@@ -1944,8 +1815,7 @@ def stream_snapshot_replica(
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=table_path,
+        source, checkpoint, _admitted(apply_batch, table_path)
     )
 
 
@@ -1958,7 +1828,6 @@ def stream_bucketed_snapshot_replica(
     bucket_cols: "list[str]",
     n_buckets: int,
     order_column: "str | None" = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #28: continuous PK replication into the BUCKETED snapshot
     table (operators/snapshot_bucketed) — stream_snapshot_replica with
@@ -1981,7 +1850,6 @@ def stream_bucketed_snapshot_replica(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
         batch_df = latest_per_key(batch_df, pk_columns, order_column)
         if current_snapshot(table_path) is None:
@@ -1999,8 +1867,7 @@ def stream_bucketed_snapshot_replica(
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=table_path,
+        source, checkpoint, _admitted(apply_batch, table_path)
     )
 
 
@@ -2015,7 +1882,6 @@ def stream_dsir_screen(
     n_buckets: int = 256,
     threshold: float = 0.0,
     term_pattern: str = "[a-z0-9]+",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #29: DSIR importance SCREENING applied continuously — the
     deployment shape of functions/text.dsir_importance: the log-ratio
@@ -2058,7 +1924,7 @@ def stream_dsir_screen(
         weight.alias("weight"),
     ).withColumn("keep", F.col("weight") >= F.lit(float(threshold)))
     return stream_file_replica(
-        screened, out_path, checkpoint, available_now=available_now
+        screened, out_path, checkpoint
     )
 
 
@@ -2071,7 +1937,6 @@ def stream_bpe_tokenize(
     id_col: str = "doc_id",
     text_col: str = "text",
     with_ids: bool = False,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #30: BPE tokenization applied CONTINUOUSLY — the tokenizer
     deployment shape end to end: merges are trained ONCE offline
@@ -2086,7 +1951,7 @@ def stream_bpe_tokenize(
 
     tok = bpe_tokenize(source, id_col, text_col, merges, with_ids=with_ids)
     return stream_file_replica(
-        tok, out_path, checkpoint, available_now=available_now
+        tok, out_path, checkpoint
     )
 
 
@@ -2102,7 +1967,6 @@ def stream_snapshot_cdc_replica(
     order_column: "str | None" = None,
     evolve: bool = False,
     update_columns: "list[str] | None" = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #31: continuous CDC replication — insert/update/DELETE —
     into the snapshot table, ONE atomic commit per micro-batch via
@@ -2156,7 +2020,6 @@ def stream_snapshot_cdc_replica(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
         batch_df = latest_per_key(batch_df, pk_columns, order_column)
         stat_cols = [prune_column] if prune_column else None
@@ -2194,8 +2057,7 @@ def stream_snapshot_cdc_replica(
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=table_path,
+        source, checkpoint, _admitted(apply_batch, table_path)
     )
 
 
@@ -2209,7 +2071,6 @@ def stream_weighted_reservoir(
     weight_col: str,
     k: int,
     seed: str = "wrs-1",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #32: a weighted reservoir (operators/sampling — exact-k
     per group, weight-proportional, Efraimidis–Spirakis A-Res)
@@ -2261,7 +2122,6 @@ def stream_weighted_reservoir(
     cols = [*group_cols, id_col, weight_col]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches.
         # read-fold-commit rides the CAS precondition (r15): the fold
         # DERIVES from the tip it read, so a concurrent fold landing in
         # the window (a double-started twin instance) refuses the
@@ -2301,8 +2161,7 @@ def stream_weighted_reservoir(
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=store_path,
+        source, checkpoint, _admitted(apply_batch, store_path)
     )
 
 
@@ -2314,7 +2173,6 @@ def stream_dedup_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Twin #33: duplicate-cluster assignments maintained CONTINUOUSLY
     as near-dup PAIRS stream in — the incremental form of the
@@ -2343,7 +2201,6 @@ def stream_dedup_components(
     )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches.
         # read-fold-commit rides the CAS precondition (r15) — see
         # stream_weighted_reservoir: a concurrent fold in the window
         # refuses and refolds from the winner's labels instead of
@@ -2375,8 +2232,7 @@ def stream_dedup_components(
         )
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=store_path,
+        source, checkpoint, _admitted(apply_batch, store_path)
     )
 
 
@@ -2478,7 +2334,6 @@ def stream_additive_counts(
     counts: "tuple[str, ...]" = ("n",),
     *,
     compact_every: "int | None" = 16,
-    available_now: bool = True,
     scratch_orphan_grace_ms: int = 3_600_000,
 ) -> StreamingQuery:
     """The shared LSM-delta-log maintainer for ADDITIVE count stores —
@@ -2543,7 +2398,6 @@ def stream_additive_counts(
     appended_since_compact = [0]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # empty + replay admission handled by _start_batches
         spark = batch_df.sparkSession
         snapshot_commit(
             derive(batch_df), store_path, meta={"batch_id": batch_id}
@@ -2581,8 +2435,7 @@ def stream_additive_counts(
                 fs.delete(scratch, recursive=True)
 
     return _start_batches(
-        source, checkpoint, apply_batch,
-        available_now=available_now, guard_path=store_path,
+        source, checkpoint, _admitted(apply_batch, store_path)
     )
 
 
@@ -2594,7 +2447,6 @@ def stream_phrase_counts(
     text_col: str = "text",
     term_pattern: str = "[a-z0-9]+",
     compact_every: "int | None" = 16,
-    available_now: bool = True,
     scratch_orphan_grace_ms: int = 3_600_000,
 ) -> StreamingQuery:
     """Twin #34: word2phrase collocation counts
@@ -2612,7 +2464,7 @@ def stream_phrase_counts(
         source, store_path, checkpoint,
         lambda b: phrase_unit_counts(b, text_col, term_pattern=term_pattern),
         ("w1", "w2"), ("n",),
-        compact_every=compact_every, available_now=available_now,
+        compact_every=compact_every,
         scratch_orphan_grace_ms=scratch_orphan_grace_ms,
     )
 
@@ -2640,7 +2492,6 @@ def stream_ngram_counts(
     *,
     text_col: str = "text",
     compact_every: "int | None" = 16,
-    available_now: bool = True,
     scratch_orphan_grace_ms: int = 3_600_000,
 ) -> StreamingQuery:
     """Twin #35: corpus-wide bigram counts (the batch
@@ -2669,6 +2520,6 @@ def stream_ngram_counts(
 
     return stream_additive_counts(
         source, store_path, checkpoint, derive, ("bigram",), ("cnt",),
-        compact_every=compact_every, available_now=available_now,
+        compact_every=compact_every,
         scratch_orphan_grace_ms=scratch_orphan_grace_ms,
     )

@@ -34,10 +34,10 @@ def test_batch_admission_guard_property(spark, tmp_path):
     """The shared per-batch admission check (_should_apply), proven
     ONCE for all twins (VERDICT r13 item 6): empty batches are
     skipped; with a guard store, batch ids at or below the last
-    committed id are replays and skipped, fresh ids are admitted;
-    skip_empty=False preserves the parquet-state twins' process-empty
-    behavior; a guard pointed at a nonexistent store admits everything
-    (first batch bootstraps)."""
+    committed id are replays and skipped, fresh ids are admitted; a
+    guard pointed at a nonexistent store admits everything (first
+    batch bootstraps). The parquet-state folds run without admission:
+    an empty batch 0 still resets stale state."""
     from replicadb_spark.operators.snapshot_table import snapshot_commit
 
     empty = spark.createDataFrame([], "k long")
@@ -47,7 +47,14 @@ def test_batch_admission_guard_property(spark, tmp_path):
     # no guard: only emptiness decides
     assert P._should_apply(rows, 0)
     assert not P._should_apply(empty, 0)
-    assert P._should_apply(empty, 0, skip_empty=False)
+
+    # a fold runs on an empty batch 0 and resets a planted stale state
+    psi_state = str(tmp_path / "admission_psi_state")
+    spark.createDataFrame([(1, 7, 99)], "bucket int, c long, last_batch long").write.parquet(psi_state)
+    P._psi_merge_fn(psi_state, "value", [10.0])(
+        spark.createDataFrame([], "value double"), 0
+    )
+    assert spark.read.parquet(psi_state).count() == 0
 
     # guard against a store that doesn't exist yet: admit (bootstrap)
     assert P._should_apply(rows, 0, guard_path=store)
@@ -789,6 +796,51 @@ def test_stream_psi_replay_guard_no_double_count(spark, tmp_path):
         (r["bucket"], r["c"]) for r in spark.read.parquet(state).collect()
     )
     assert final == [(1, 2), (2, 2), (3, 2)]
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_state_fold_leaves_no_persisted_blocks(spark, tmp_path):
+    """A state fold writes its new state aside and swaps it in, so no
+    batch leaves a checkpointed or cached RDD behind: a long stream
+    must not pile up one batch's blocks per micro-batch."""
+    merge = P._psi_merge_fn(str(tmp_path / "psi_blocks"), "value", [10.0])
+    batch = spark.createDataFrame([(5.0,), (15.0,)], "value double")
+    merge(batch, 0)
+    before = _persistent_rdds(spark)
+    for batch_id in (1, 2, 3):
+        merge(batch, batch_id)
+    assert _persistent_rdds(spark) == before
+
+
+def test_state_fold_failed_write_keeps_previous_state(spark, tmp_path):
+    """A batch whose state write fails part-way must leave the previous
+    state readable and unchanged — a deleted state would read as absent
+    on the next batch and silently reset the fold."""
+    state = str(tmp_path / "psi_failed_write")
+    merge = P._psi_merge_fn(state, "value", [10.0])
+    merge(spark.createDataFrame([(5.0,), (15.0,)], "value double"), 0)
+    merge(spark.createDataFrame([(25.0,)], "value double"), 1)
+
+    def read():
+        return sorted(
+            (r["bucket"], r["c"], r["last_batch"])
+            for r in spark.read.parquet(state).collect()
+        )
+
+    before = read()
+    assert before == [(1, 1, 0), (2, 2, 1)]
+    bad = spark.range(3).select(
+        F.raise_error(F.lit("boom")).cast("double").alias("value")
+    )
+    with pytest.raises(Exception, match="boom"):
+        merge(bad, 2)
+    assert read() == before
+    # and the next batch folds onto the intact state
+    merge(spark.createDataFrame([(5.0,)], "value double"), 3)
+    assert read() == [(1, 2, 3), (2, 2, 1)]
 
 
 def test_stream_cdc_apply_equals_batch_apply(spark, tmp_path):
