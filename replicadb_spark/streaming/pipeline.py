@@ -136,15 +136,16 @@ def _state_fold(state_path: str, fold):
 
     The new state is written to the sibling ``<state>.__replicadb_tmp__``
     and swapped in by :func:`sinks.files.swap_dir` (directly to the
-    path when no state exists yet): the write never reads the files it
-    replaces, so no checkpoint has to cut the lineage, and a write that
-    fails part-way leaves the previous state intact instead of deleted
-    — a deleted state would read as absent on the next batch and
-    silently reset. A state that exists but cannot be read fails the
+    path when no state exists yet): the write reads the old state but
+    never overwrites it, so no checkpoint has to cut the lineage, and a
+    write that fails part-way leaves the previous state intact instead
+    of deleted — a deleted state would read as absent on the next batch
+    and silently reset. A state that exists but cannot be read fails the
     batch (:func:`sources.files.read_or_none`)."""
     from replicadb_spark.sinks.files import swap_dir
 
-    base = state_path.rstrip("/")
+    tmp = state_path.rstrip("/") + ".__replicadb_tmp__"
+    old = state_path.rstrip("/") + ".__replicadb_old__"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -155,11 +156,8 @@ def _state_fold(state_path: str, fold):
         if current is None:
             new.write.mode("overwrite").parquet(state_path)
             return
-        new.write.mode("overwrite").parquet(base + ".__replicadb_tmp__")
-        swap_dir(
-            spark, state_path, base + ".__replicadb_tmp__",
-            base + ".__replicadb_old__",
-        )
+        new.write.mode("overwrite").parquet(tmp)
+        swap_dir(spark, state_path, tmp, old)
 
     return apply_batch
 
